@@ -16,6 +16,9 @@ Operators:
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -535,6 +538,102 @@ def bloom_probe(
     return F.expr(" AND ".join(tests))
 
 
+def _term_count(toks: Column, term: str) -> Column:
+    """Occurrences of ``term`` in a token array. A one-argument lambda on
+    purpose: ``F.filter`` hands a two-argument lambda the element index."""
+    return F.size(F.filter(toks, lambda x: x == F.lit(term)))
+
+
+def _bm25_frames(
+    df: DataFrame, terms: list[str], text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two lazy frames :func:`bm25_topk` runs on: ``docs`` holds one
+    narrow row per document — ``(id, __dl, __tf0 .. __tf{|Q|-1})`` — and
+    ``stats`` folds it to the corpus scalars ``(N, toks, df0 ..)``. Only
+    documents with at least one token count towards N and the token total,
+    as in the exploded formulation they replace. The token array is built
+    once per document and counted per term inside the array, so nothing
+    is exploded and nothing shuffles on the document key."""
+    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
+    docs = df.select(F.col(id_col), toks.alias("__toks")).select(
+        F.col(id_col),
+        F.size("__toks").alias("__dl"),
+        *[
+            _term_count(F.col("__toks"), t).alias(f"__tf{i}")
+            for i, t in enumerate(terms)
+        ],
+    )
+    has_toks = F.col("__dl") > 0
+    stats = docs.agg(
+        F.count(F.when(has_toks, 1)).alias("N"),
+        F.sum(F.when(has_toks, F.col("__dl"))).alias("toks"),
+        *[
+            F.count(F.when(F.col(f"__tf{i}") > 0, 1)).alias(f"df{i}")
+            for i in range(len(terms))
+        ],
+    )
+    return docs, stats
+
+
+def _bm25_topk_frame(
+    docs: DataFrame,
+    n_docs: int,
+    n_toks: int,
+    dfreq: list[int],
+    id_col: str,
+    k: int,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """Lazy top-k ``(id, score_micro)`` over ``docs`` given the corpus
+    scalars as literals: a narrow score projection and an
+    ``orderBy().limit(k)`` = TakeOrderedAndProject (each task keeps a
+    local k-heap, the driver merges the partition heads)."""
+    n = F.lit(n_docs).cast("long")
+    avgdl = F.lit(n_toks).cast("long") / n
+    micro, hit = [], []
+    for i, d in enumerate(dfreq):
+        if d == 0:
+            continue  # a term no document holds adds nothing to any score
+        tf = F.col(f"__tf{i}")
+        df_t = F.lit(d).cast("long")
+        idf = F.log(F.lit(1.0) + (n - df_t + F.lit(0.5)) / (df_t + F.lit(0.5)))
+        norm = F.lit(1.0 - b) + F.lit(b) * F.col("__dl") / avgdl
+        contrib = idf * (tf * F.lit(k1 + 1.0)) / (tf + F.lit(k1) * norm)
+        micro.append(
+            F.when(tf > 0, F.round(contrib * F.lit(1e6)).cast("long")).otherwise(0)
+        )
+        hit.append(tf > 0)
+    return (
+        docs.where(reduce(operator.or_, hit) & F.col(id_col).isNotNull())
+        .select(F.col(id_col), reduce(operator.add, micro).alias("score_micro"))
+        .orderBy(F.col("score_micro").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
+
+
+def _ranked_relation(spark, rows: list, id_col: str, id_type) -> DataFrame:
+    """``(id, score_micro)`` rows, already in rank order, as a JVM-local
+    relation ``(id, score_micro, rank)``: a VALUES list whose ids and
+    scores enter as bound parameters, never as SQL text. Reading it runs
+    no Spark job (``createDataFrame`` on a Python list is RDD-backed and
+    would). No rows gives the same three typed columns, empty."""
+    args = {}
+    for j, (i, s) in enumerate(rows):
+        args[f"i{j}"], args[f"s{j}"] = i, s
+    values = ", ".join(f"(:i{j}, :s{j}, {j + 1})" for j in range(len(rows)))
+    out = spark.sql(
+        f"SELECT * FROM VALUES {values}" if rows
+        else "SELECT * FROM VALUES (NULL, NULL, NULL) LIMIT 0",
+        args=args,
+    )
+    return out.select(
+        F.col("col1").cast(id_type).alias(id_col),
+        F.col("col2").cast("long").alias("score_micro"),
+        F.col("col3").cast("int").alias("rank"),
+    )
+
+
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
@@ -554,83 +653,42 @@ def bm25_topk(
     fixed to BIGINT micro-units (round(x * 1e6)) BEFORE the per-document
     sum, so the sum is exact integer arithmetic — invariant to summation
     order across partitions and engines (a double sum is not), which is
-    what makes the score exactly oracle-checkable.
+    what makes the score exactly oracle-checkable. Repeated query terms
+    count once; documents with a NULL id are never ranked.
 
-    Scale shape: explode -> per-doc length agg + per-(doc, query-term) tf
-    agg (the tf frame is pre-filtered to the query vocabulary, so it is
-    O(docs x |Q|), tiny) -> corpus scalars (N, avgdl) broadcast as a 1-row
-    crossJoin -> one final per-doc sum + TakeOrdered top-k. No data-scale
-    join: the only shuffles key on doc_id / term, uniform.
+    Scale shape: one pass over the text builds O(docs) narrow rows
+    ``(id, dl, tf per distinct query term)`` — counted inside each
+    document's token array, no explode — persisted for two actions: one
+    global aggregate returns the |Q|+2 corpus scalars (N, token total,
+    df per term), then a narrow score projection that takes them as
+    literals feeds a TakeOrderedAndProject, so only k rows reach the
+    driver. No join, no window and no exchange keyed on documents; on a
+    micro corpus (the ``maintenance_plan_scope`` gate) that is two Spark
+    jobs. The search is eager: the ranked rows come back as a local
+    relation, and nothing stays persisted.
     """
-    from pyspark.sql import Window
+    from incremental_etl_on_lakehouse_spark.lake.table import (
+        maintenance_plan_scope,
+    )
 
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
-    # One-pass shapes (the old formulation exploded the FULL corpus four
-    # times — dl, tf, dfreq and the N/avgdl scalars each re-ran the
-    # explode):
-    # - document length is size() of the token array — narrow, no explode,
-    #   no shuffle; dl > 0 keeps exactly the docs the exploded groupBy saw;
-    # - only QUERY-TERM occurrences are exploded for tf (the filter runs
-    #   inside the array, before the generator — O(matches), not O(tokens));
-    # - corpus scalars fold the persisted O(docs) length table: N = docs
-    #   with tokens, toks = sum of lengths — identical values;
-    # - tf (O(docs x |Q|)) persists for its two consumers (dfreq, scored).
-    dl = (
-        df.select(F.col(id_col), F.size(toks).alias("dl"))
-        .where(F.col("dl") > 0)
-        .persist()
-    )
-    qlit = F.array(*[F.lit(t) for t in query_terms])
-    qtoks = F.filter(toks, lambda x: F.array_contains(qlit, x))
-    tf = (
-        df.select(F.col(id_col), F.explode(qtoks).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"))
-        .persist()
-    )
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    stats = dl.agg(
-        F.count("*").alias("__N"),
-        F.sum("dl").alias("__toks"),
-    )
-    scored = (
-        tf.join(dfreq, "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-        .withColumn("__avgdl", F.col("__toks") / F.col("__N"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("__N") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    contrib = (
-        idf
-        * (F.col("tf") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("__avgdl"))
-        )
-    )
-    per_doc = (
-        scored.withColumn(
-            "__micro", F.round(contrib * F.lit(1e6)).cast("long")
-        )
-        .groupBy(id_col)
-        .agg(F.sum("__micro").alias("score_micro"))
-    )
-    # Top-k via orderBy().limit(k) = TakeOrderedAndProject: each task keeps
-    # its local top k and the driver merges partition heads — never a global
-    # sort or an unpartitioned window funneling all O(docs) scores through
-    # one reducer. The rank column is then a window over the ALREADY-reduced
-    # k rows (bounded by k, not by corpus size).
-    topk = per_doc.orderBy(
-        F.col("score_micro").desc(), F.col(id_col).asc()
-    ).limit(k)
-    w = Window.orderBy(F.col("score_micro").desc(), F.col(id_col).asc())
-    return topk.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "score_micro", "rank"
-    )
+    spark = df.sparkSession
+    terms = list(dict.fromkeys(query_terms))
+    docs, stats = _bm25_frames(df, terms, text_col, id_col)
+    id_type = docs.schema[0].dataType
+    top: list = []
+    if terms:
+        with maintenance_plan_scope(spark, df):
+            docs.persist()
+            try:
+                s = stats.collect()[0]
+                dfreq = [s[f"df{i}"] for i in range(len(terms))]
+                if any(dfreq):
+                    top = _bm25_topk_frame(
+                        docs, s["N"], s["toks"], dfreq, id_col, k, k1, b
+                    ).collect()
+            finally:
+                docs.unpersist()
+    return _ranked_relation(spark, top, id_col, id_type)
 
 
 def quality_buckets_by_threshold(

@@ -10,6 +10,7 @@ duplicate values exercising the multiset distinct state.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from incremental_etl_on_lakehouse_spark.lake import LakeStreamReader, LakeTable
@@ -340,3 +341,30 @@ def test_incremental_topk_random_differential(spark, tmp_path, seed):
         sync()
         got = {(r.grp, r.val): r.cnt for r in topk.to_df().collect()}
         assert got == expected(), (seed, op, got, expected())
+
+
+def test_failed_classification_leaves_nothing_persisted(
+    spark, tmp_path, monkeypatch
+):
+    """The per-group frame is persisted for the classification collect,
+    the branches and the merge source; an error anywhere after the persist
+    — here in the classification collect itself, after it materialized the
+    cache — must still release it."""
+    mm = LakeTable.create(spark, str(tmp_path / "mm"), MM)
+    base = spark.createDataFrame([(1, "a", 5), (2, "b", 7)], ROWS)
+    changes = base.withColumn("_change_type", F.lit("insert"))
+    cls = type(base)
+    real = cls.collect
+
+    def collect(self):
+        out = real(self)
+        if "__n_rec" in self.columns:
+            raise RuntimeError("classification failed")
+        return out
+
+    monkeypatch.setattr(cls, "collect", collect)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="classification failed"):
+        incremental_minmax_update(mm, base, changes, ["grp"], "val")
+    assert jsc.getPersistentRDDs().size() == before

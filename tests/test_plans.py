@@ -143,21 +143,74 @@ def test_quality_buckets_scale_has_no_global_ntile(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan, plan
 
 
+def _bm25_executed_frames(spark, sf_dir, terms):
+    """The two frames bm25_topk runs its actions on, built by the same
+    internal builders over the same input ``ext_bm25_topk`` uses: the
+    corpus-scalar aggregate and the top-k frame (fed the scalars the
+    aggregate returns)."""
+    from incremental_etl_on_lakehouse_spark.operators import spread
+    from incremental_etl_on_lakehouse_spark.operators.text import (
+        _bm25_frames,
+        _bm25_topk_frame,
+    )
+
+    docs = spread(load_table(spark, "documents", sf_dir)).select("doc_id", "text")
+    per_doc, stats = _bm25_frames(docs, terms, "text", "doc_id")
+    s = stats.collect()[0]
+    dfreq = [s[f"df{i}"] for i in range(len(terms))]
+    assert any(dfreq), s
+    topk = _bm25_topk_frame(
+        per_doc, s["N"], s["toks"], dfreq, "doc_id", 10, 1.2, 0.75
+    )
+    return stats, topk
+
+
 def test_bm25_topk_uses_take_ordered(spark, sf_dir):
     """bm25 ranks via TakeOrderedAndProject (per-partition local top-k,
-    driver-merged heads) — NOT an unpartitioned row_number window funneling
-    all O(docs) scores through one reducer (the round-5 review finding).
-    The rank column's window survives but sits ABOVE the TakeOrdered node,
-    so any single-partition exchange carries at most k rows: the formatted
-    tree prints root-first, so that exchange must appear EARLIER in the
-    text than the TakeOrdered bounding its input."""
-    df = QUERIES["ext_bm25_topk"](spark, sf_dir)
-    plan = plans.formatted_plan(df)
+    driver-merged heads) — NOT a sort or an unpartitioned row_number window
+    funneling all O(docs) scores through one reducer. The rank is numbered
+    on the driver over the <= k collected rows, so the executed top-k plan
+    holds no window at all, and what bm25_topk returns is already
+    materialized: a local relation, no scan."""
+    _, topk = _bm25_executed_frames(spark, sf_dir, ["merge", "stream", "vector"])
+    plan = plans.formatted_plan(topk)
     assert "TakeOrderedAndProject" in plan, plan
-    if "Exchange SinglePartition" in plan:
-        assert plan.index("Exchange SinglePartition") < plan.index(
-            "TakeOrderedAndProject"
-        ), plan
+    assert "Window" not in plan, plan
+    out = plans.formatted_plan(QUERIES["ext_bm25_topk"](spark, sf_dir))
+    assert "LocalTableScan" in out and "Scan parquet" not in out, out
+
+
+def test_spread_decides_from_metadata_without_jobs(spark, sf_dir):
+    """spread() runs no Spark job. On a persisted frame whose cached plan
+    is adaptive, ``df.rdd.getNumPartitions()`` executes the query stages
+    (three jobs per corpus batch, under minhash_band_table, redone by the
+    later action). The decision stays the same: a tiny aggregate, which
+    AQE coalesces to one partition, is still repartitioned; an explicit
+    repartition count is read exactly; a narrow scan reports its split."""
+    from incremental_etl_on_lakehouse_spark.operators import (
+        planned_partitions,
+        spread,
+    )
+
+    sc = spark.sparkContext
+    agg = (
+        spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().persist()
+    )
+    try:
+        sc.setJobGroup("spread-jobs", "spread decision")
+        try:
+            out = spread(agg, 4)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup("spread-jobs") or []
+        assert len(jobs) == 0, f"spread() ran {len(jobs)} Spark jobs"
+        assert out is not agg and planned_partitions(out) == 4
+        agg.count()
+        assert planned_partitions(agg) == agg.rdd.getNumPartitions() == 1
+    finally:
+        agg.unpersist()
+    docs = load_table(spark, "documents", sf_dir)
+    assert planned_partitions(docs) == docs.rdd.getNumPartitions()
 
 
 def test_topk_prereduces_before_global_rank(spark, sf_dir):
@@ -643,16 +696,18 @@ def test_by_source_merge_result_and_gating(spark, tmp_path):
 
 
 def test_bm25_no_datascale_join_and_pushed_term_filter(spark, sf_dir):
-    from incremental_etl_on_lakehouse_spark.operators.text import bm25_topk
-    from incremental_etl_on_lakehouse_spark.tables import load_table as _lt
-
-    docs = _lt(spark, "documents", sf_dir).select("doc_id", "text")
-    df = bm25_topk(docs, ["merge", "stream"], k=5)
-    plan = plans.formatted_plan(df)
-    # corpus scalars ride a broadcast 1-row crossJoin (BNLJ), never a
-    # shuffled cartesian
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    """Both executed bm25 plans stay narrow over the corpus: query terms are
+    counted inside each document's token array (no explode/Generate), the
+    corpus scalars enter the score as literals (no join of any kind — no
+    broadcast 1-row crossJoin, no CartesianProduct), and no exchange is
+    keyed on documents: the aggregate's only exchange is the global
+    SinglePartition one, and the input split is spread()'s RoundRobin."""
+    for df in _bm25_executed_frames(spark, sf_dir, ["merge", "stream"]):
+        plan = plans.formatted_plan(df)
+        for node in ("Join", "CartesianProduct", "Generate", "Window"):
+            assert node not in plan, plan
+        for part in plans.exchange_partitionings(df):
+            assert not part.startswith("hashpartitioning"), plan
 
 
 def test_by_source_probe_broadcasts_the_batch(spark, tmp_path):
