@@ -159,67 +159,81 @@ _SQL_NONCOLUMN_WORDS = frozenset(
 
 
 @contextlib.contextmanager
-def _micro_plan_mode(spark: SparkSession, active: bool):
-    """Scoped AQE disable for PROVABLY-MICRO jobs.
-
-    AQE's per-shuffle query-stage materialization is the right trade on
-    big inputs (skew split, partition coalescing) but is pure fixed cost
-    on a job the caller KNOWS is a few-thousand-row rewrite — measured
-    14-26% of micro-batch merge wall on the sf0.1 CDC keys. Callers gate
-    ``active`` on exact row counts from the commit log / plan probe
-    (metadata-driven, like the merge broadcast hint), so a big write
-    never loses AQE. Config scope is the session: concurrent writers in
-    one session may transiently plan without AQE — a performance-mode
-    wobble only, never a semantics change.
-    """
-    if not active:
+def conf_scope(spark: SparkSession, settings: dict[str, str]):
+    """Set session confs for the scope; on exit (normal or exception)
+    restore each key's prior session value, or unset a key the session
+    had not set. An empty ``settings`` costs no round trip."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
         yield
-        return
-    key = "spark.sql.adaptive.enabled"
-    pkey = "spark.sql.shuffle.partitions"
-    bkey = "spark.sql.autoBroadcastJoinThreshold"
-    ckey = "spark.sql.codegen.wholeStage"
-    prev = spark.conf.get(key, "true")
-    prev_p = spark.conf.get(pkey, None)
-    prev_b = spark.conf.get(bkey, None)
-    prev_c = spark.conf.get(ckey, None)
-    spark.conf.set(key, "false")
+    finally:
+        for k, p in prev.items():
+            if p is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, p)
+
+
+# Scoped plan mode for PROVABLY-MICRO jobs (``conf_scope(spark,
+# MICRO_PLAN_CONF if micro else {})``). AQE's per-shuffle query-stage
+# materialization is the right trade on big inputs (skew split, partition
+# coalescing) but is pure fixed cost on a job the caller KNOWS is a
+# few-thousand-row rewrite — measured 14-26% of micro-batch merge wall on
+# the sf0.1 CDC keys. Callers gate the scope on exact row counts from the
+# commit log / plan probe (metadata-driven, like the merge broadcast
+# hint), so a big write never loses AQE. Config scope is the session:
+# concurrent writers in one session may transiently plan without AQE — a
+# performance-mode wobble only, never a semantics change.
+MICRO_PLAN_CONF = {
+    "spark.sql.adaptive.enabled": "false",
     # ... and no whole-stage codegen: a provably-micro job's few thousand
     # rows never amortize a Janino compile, and the compile cache misses
     # on every merge because the generated code embeds literals that
     # change per commit (file paths, versions) — measured as the largest
     # slice of the ~0.3 s/job floor on 1-task maintenance jobs. Scoped to
     # micro plans only; big jobs keep codegen (where it pays).
-    spark.conf.set(ckey, "false")
+    "spark.sql.codegen.wholeStage": "false",
     # a provably-micro shuffle needs exactly one reducer: N static
     # partitions are N near-empty tasks each paying scheduler+launch
     # overhead (32 locally, 200 on a default cluster session), and with
     # AQE off nothing coalesces them. Gated on the same exact row counts
     # as the AQE disable, so a big shuffle never sees this.
-    spark.conf.set(pkey, "1")
+    "spark.sql.shuffle.partitions": "1",
     # ... and no broadcast joins: every BroadcastExchange spawns its own
     # driver-side build JOB (the withThreadLocalCaptured future), which on
     # single-partition micro plans costs more scheduling than the join it
     # feeds — a 1-task sort-merge/hash join executes INSIDE the one job.
     # Explicit broadcast() hints override this; micro-aware callers gate
     # their hints on the scope decision.
-    spark.conf.set(bkey, "-1")
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
+_NO_PARTITION_INFERENCE = {
+    "spark.sql.sources.partitionColumnTypeInference.enabled": "false"
+}
+
+
+@contextlib.contextmanager
+def persist_scope():
+    """Owns every frame persisted inside it: ``persist(df)`` persists the
+    frame and returns it; on exit — normal return, early return or
+    exception — each one is unpersisted (non-blocking). The persist call
+    sits wherever the caller needs it (inside a plan-conf scope, after a
+    probe), since persist() compiles the cached plan at call time."""
+    held: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
+
     try:
-        yield
+        yield persist
     finally:
-        spark.conf.set(key, prev)
-        if prev_p is None:
-            spark.conf.unset(pkey)
-        else:
-            spark.conf.set(pkey, prev_p)
-        if prev_b is None:
-            spark.conf.unset(bkey)
-        else:
-            spark.conf.set(bkey, prev_b)
-        if prev_c is None:
-            spark.conf.unset(ckey)
-        else:
-            spark.conf.set(ckey, prev_c)
+        for df in held:
+            df.unpersist()
 
 
 # planning inputs at or under this byte total are "provably micro": AQE's
@@ -266,30 +280,8 @@ def maintenance_plan_scope(spark: SparkSession, *dfs: DataFrame):
             break
         total += b
     micro = micro and total <= MICRO_PLAN_INPUT_BYTES
-    with _micro_plan_mode(spark, micro):
+    with conf_scope(spark, MICRO_PLAN_CONF if micro else {}):
         yield micro
-
-
-@contextlib.contextmanager
-def _cached_plan_aqe(spark: SparkSession):
-    """Scoped enable of AQE re-planning INSIDE cached subtrees
-    (``canChangeCachedPlanOutputPartitioning``): the merge path persists
-    its source frame, and on sessions not built by :func:`session.
-    get_spark` the default (false) leaves the cached plan's shuffles at
-    the full static partition count — a 200-task reducer under a 4-row
-    delta agg, measurable fixed cost per micro-batch merge. Scoped
-    set-and-restore: a library write path must not permanently mutate the
-    caller's session planning behavior."""
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _refs_target(condition: str) -> bool:
@@ -689,13 +681,8 @@ class LakeTable:
         # infer to int 1 — unrecoverable). Delta's CONVERT requires an
         # explicit partition schema for the same reason; callers wanting
         # typed partition columns pass ``partition_types``.
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev_infer = spark.conf.get(infer_key, "true")
-        spark.conf.set(infer_key, "false")
-        try:
+        with conf_scope(spark, _NO_PARTITION_INFERENCE):
             schema = spark.read.parquet(t.path).schema
-        finally:
-            spark.conf.set(infer_key, prev_infer)
         if partition_types:
             unknown = [c for c in partition_types if c not in part_cols]
             if unknown:
@@ -1871,20 +1858,13 @@ class LakeTable:
             # the cast (day=01 -> int 1 -> string "1", not "01"). The
             # discovery happens eagerly at .parquet(), so the scoped
             # toggle pins it.
-            infer_key = (
-                "spark.sql.sources.partitionColumnTypeInference.enabled"
-            )
-            prev_infer = self.spark.conf.get(infer_key, "true")
-            self.spark.conf.set(infer_key, "false")
-            try:
+            with conf_scope(self.spark, _NO_PARTITION_INFERENCE):
                 raws = {
                     root: self.spark.read.schema(data_fields)
                     .option("basePath", root)
                     .parquet(*fs)
                     for root, fs in groups.items()
                 }
-            finally:
-                self.spark.conf.set(infer_key, prev_infer)
             for root, raw in raws.items():
                 present = set(raw.columns)
                 cols = [
@@ -2649,10 +2629,12 @@ class LakeTable:
         # below otherwise pay per-Exchange AQE jobs and broadcast builds —
         # pure fixed cost when the whole table is provably micro (analyzed
         # leaf bytes); a big table keeps AQE
-        with maintenance_plan_scope(self.spark, self.to_df()):
-            return self._delete_impl(condition)
+        with maintenance_plan_scope(
+            self.spark, self.to_df()
+        ), persist_scope() as persist:
+            return self._delete_impl(condition, persist)
 
-    def _delete_impl(self, condition: str) -> int:
+    def _delete_impl(self, condition: str, persist) -> int:
         """DELETE FROM table WHERE condition — rewrites only touched files.
 
         Commits as (snapshot version at read time) + 1: a concurrent commit
@@ -2705,7 +2687,7 @@ class LakeTable:
             # Deletion-vector path: mark the doomed rows in a sidecar; zero
             # data-file rewrite (the Delta DV DELETE). Read-side anti-join
             # subtracts them everywhere (_read_files).
-            doomed = touched_rows.where(cond).persist()
+            doomed = persist(touched_rows.where(cond))
             commit_dv, removable = self._write_dv(doomed, touched, dvmap)
             n_del = doomed.count()
             cdf_rel = None
@@ -2715,7 +2697,6 @@ class LakeTable:
                         CHANGE_TYPE, F.lit("delete")
                     )
                 )
-            doomed.unpersist()
             v = snapshot_version + 1
             lakelog.write_commit(
                 self.path,
@@ -2770,11 +2751,13 @@ class LakeTable:
         self, assignments: dict[str, str], condition: str | None = None
     ) -> int:
         # micro scope: see delete()
-        with maintenance_plan_scope(self.spark, self.to_df()):
-            return self._update_impl(assignments, condition)
+        with maintenance_plan_scope(
+            self.spark, self.to_df()
+        ), persist_scope() as persist:
+            return self._update_impl(assignments, condition, persist)
 
     def _update_impl(
-        self, assignments: dict[str, str], condition: str | None = None
+        self, assignments: dict[str, str], condition: str | None, persist
     ) -> int:
         """UPDATE table SET col = expr, ... [WHERE condition] — rewrites
         only touched files (Delta's UPDATE command).
@@ -2846,7 +2829,7 @@ class LakeTable:
             # DV UPDATE (Delta's DV-enabled UPDATE): mark the old versions
             # of updated rows in a sidecar and stage ONLY the updated rows
             # as new data — untouched rows in the file are never rewritten.
-            affected = touched_rows.where(cond).persist()
+            affected = persist(touched_rows.where(cond))
             commit_dv, removable = self._write_dv(affected, touched, dvmap)
             rid = (
                 [F.col("_row_id").alias("__row_id")] if rt else []
@@ -2868,7 +2851,6 @@ class LakeTable:
                         )
                     )
                 )
-            affected.unpersist()
             v = snapshot_version + 1
             lakelog.write_commit(
                 self.path,
@@ -3503,11 +3485,22 @@ class LakeTable:
         txn_app_id: str | None = None,
         txn_version: int | None = None,
     ) -> dict:
-        with _cached_plan_aqe(self.spark):
+        # AQE re-planning INSIDE cached subtrees: the merge persists its
+        # source frame, and on sessions not built by
+        # :func:`session.get_spark` the default (false) leaves the cached
+        # plan's shuffles at the full static partition count — a 200-task
+        # reducer under a 4-row delta agg, measurable fixed cost per
+        # micro-batch merge. Scoped set-and-restore: a library write path
+        # must not permanently mutate the caller's session planning.
+        with conf_scope(
+            self.spark,
+            {"spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true"},
+        ), persist_scope() as persist:
             return self._merge_impl(
                 source,
                 condition,
                 clauses,
+                persist,
                 stats_prune=stats_prune,
                 merge_schema=merge_schema,
                 txn_app_id=txn_app_id,
@@ -3519,6 +3512,7 @@ class LakeTable:
         source: DataFrame,
         condition: str,
         clauses: list[MergeClause],
+        persist,
         stats_prune: dict[str, str] | None = None,
         merge_schema: bool = False,
         txn_app_id: str | None = None,
@@ -3714,17 +3708,18 @@ class LakeTable:
             and src_bytes is not None
             and src_bytes <= MICRO_PLAN_INPUT_BYTES
         )
+        probe_conf = MICRO_PLAN_CONF if probe_micro else {}
         # The source is evaluated by several jobs (bounds, touched-file
         # probe, rewrite join, insert anti-join); persist it so any upstream
         # work (e.g. a dedup window) runs once. persist() compiles the
         # cached physical plan at CALL time, so it sits inside the probe
         # micro scope — that is what keeps the cached subtree non-adaptive.
-        with _micro_plan_mode(self.spark, probe_micro):
-            src_persisted = source.withColumn("__s_match", F.lit(True)).persist()
+        with conf_scope(self.spark, probe_conf):
+            src_persisted = persist(source.withColumn("__s_match", F.lit(True)))
         src = src_persisted.alias("source")
         cond = F.expr(condition)
         if prune_map:
-            with _micro_plan_mode(self.spark, probe_micro):
+            with conf_scope(self.spark, probe_conf):
                 bounds_row = src_persisted.agg(
                     *[
                         f
@@ -3844,14 +3839,14 @@ class LakeTable:
             if target_empty
             else F.expr("target.`__file`")
         )
-        with _micro_plan_mode(self.spark, probe_micro):
+        with conf_scope(self.spark, probe_conf):
             if target_empty:
-                s_joined = src.withColumn("__action", s_action).persist()
+                s_joined = persist(src.withColumn("__action", s_action))
             else:
-                s_joined = (
-                    src.join(target_plan, cond, "left_outer")
-                    .withColumn("__action", s_action)
-                    .persist()
+                s_joined = persist(
+                    src.join(target_plan, cond, "left_outer").withColumn(
+                        "__action", s_action
+                    )
                 )
             plan_rows = (
                 s_joined.groupBy(F.col("__action"), file_col.alias("__f"))
@@ -3903,12 +3898,11 @@ class LakeTable:
             # same probe-micro gate: by-source merges read the FULL target
             # (prune_map cleared above), so total_target_rows covers the
             # whole anti-join input
-            with _micro_plan_mode(self.spark, probe_micro):
-                bs_fired = (
+            with conf_scope(self.spark, probe_conf):
+                bs_fired = persist(
                     target.join(bs_src, cond, "left_anti")
                     .withColumn("__action", bs_action)
                     .where(F.col("__action") != "keep")
-                    .persist()
                 )
                 bs_rows = (
                     bs_fired.groupBy(
@@ -3933,411 +3927,406 @@ class LakeTable:
         ).alias("target")
         joined = touched_target.join(src, cond, "left_outer")
         inserts = None
-        try:
-            # Rewrite-side action classifier + post-image projection, both
-            # as SQL strings (one F.expr / one selectExpr round trip): the
-            # per-column nested F.when chain paid O(columns x clauses)
-            # py4j round trips per merge (guide §5). CASE branches are
-            # disjoint on __action, so flattening the original nested
-            # otherwise() chain preserves semantics exactly.
-            action_branches: list[str] = []
-            for i, cl in enumerate(matched_clauses):
-                c = (
-                    f"({cl.condition})" if cl.condition is not None else "TRUE"
-                )
-                action_branches.append(
-                    f"WHEN (__s_match IS NOT NULL) AND {c} THEN '{cl.kind}{i}'"
-                )
-            for i, cl in enumerate(by_source_clauses):
-                c = (
-                    f"coalesce(({cl.condition}), FALSE)"
-                    if cl.condition is not None
-                    else "TRUE"
-                )
-                action_branches.append(
-                    f"WHEN (__s_match IS NULL) AND {c} THEN '{cl.kind}{i}'"
-                )
-            acted = joined.withColumn(
-                "__action",
-                F.expr(
-                    "CASE " + " ".join(action_branches) + " ELSE 'keep' END"
-                    if action_branches
-                    else "'keep'"
-                ),
+        # Rewrite-side action classifier + post-image projection, both
+        # as SQL strings (one F.expr / one selectExpr round trip): the
+        # per-column nested F.when chain paid O(columns x clauses)
+        # py4j round trips per merge (guide §5). CASE branches are
+        # disjoint on __action, so flattening the original nested
+        # otherwise() chain preserves semantics exactly.
+        action_branches: list[str] = []
+        for i, cl in enumerate(matched_clauses):
+            c = (
+                f"({cl.condition})" if cl.condition is not None else "TRUE"
             )
+            action_branches.append(
+                f"WHEN (__s_match IS NOT NULL) AND {c} THEN '{cl.kind}{i}'"
+            )
+        for i, cl in enumerate(by_source_clauses):
+            c = (
+                f"coalesce(({cl.condition}), FALSE)"
+                if cl.condition is not None
+                else "TRUE"
+            )
+            action_branches.append(
+                f"WHEN (__s_match IS NULL) AND {c} THEN '{cl.kind}{i}'"
+            )
+        acted = joined.withColumn(
+            "__action",
+            F.expr(
+                "CASE " + " ".join(action_branches) + " ELSE 'keep' END"
+                if action_branches
+                else "'keep'"
+            ),
+        )
 
-            src_cols = set(source.columns)
+        src_cols = set(source.columns)
 
-            def target_or_null_sql(colname: str) -> str:
-                # evolved columns don't exist in the target scan yet:
-                # untouched rows carry NULL (schema-on-read)
-                if colname in old_cols:
-                    return f"target.`{_bq(colname)}`"
-                return f"CAST(NULL AS {tgt_types[colname].simpleString()})"
+        def target_or_null_sql(colname: str) -> str:
+            # evolved columns don't exist in the target scan yet:
+            # untouched rows carry NULL (schema-on-read)
+            if colname in old_cols:
+                return f"target.`{_bq(colname)}`"
+            return f"CAST(NULL AS {tgt_types[colname].simpleString()})"
 
-            def post_exprs(
-                include_matched: bool, include_bs: bool
-            ) -> list[str]:
-                """Post-image projection (SQL strings): per column, a CASE
-                over the selected update-clause families, falling back to
-                the target value (NULL for evolved columns)."""
-                exprs = []
-                for colname in tgt_cols:
-                    val_branches: list[str] = []
-                    if include_matched:
-                        for i, cl in enumerate(matched_clauses):
-                            if cl.kind != "update":
-                                continue
-                            if cl.assignments == "*" or cl.assignments is None:
-                                e = (
-                                    f"source.`{_bq(colname)}`"
-                                    if colname in src_cols
-                                    else target_or_null_sql(colname)
-                                )
-                            else:
-                                e = (
-                                    f"({cl.assignments[colname]})"
-                                    if colname in cl.assignments
-                                    else target_or_null_sql(colname)
-                                )
-                            val_branches.append(
-                                f"WHEN __action = 'update{i}' THEN {e}"
+        def post_exprs(
+            include_matched: bool, include_bs: bool
+        ) -> list[str]:
+            """Post-image projection (SQL strings): per column, a CASE
+            over the selected update-clause families, falling back to
+            the target value (NULL for evolved columns)."""
+            exprs = []
+            for colname in tgt_cols:
+                val_branches: list[str] = []
+                if include_matched:
+                    for i, cl in enumerate(matched_clauses):
+                        if cl.kind != "update":
+                            continue
+                        if cl.assignments == "*" or cl.assignments is None:
+                            e = (
+                                f"source.`{_bq(colname)}`"
+                                if colname in src_cols
+                                else target_or_null_sql(colname)
                             )
-                    if include_bs:
-                        for i, cl in enumerate(by_source_clauses):
-                            if cl.kind != "update_by_source":
-                                continue
-                            # by-source: no source row — assignments are
-                            # target-only SQL (dict form enforced at entry)
+                        else:
                             e = (
                                 f"({cl.assignments[colname]})"
                                 if colname in cl.assignments
                                 else target_or_null_sql(colname)
                             )
-                            val_branches.append(
-                                f"WHEN __action = 'update_by_source{i}' THEN {e}"
-                            )
-                    base = target_or_null_sql(colname)
-                    sql = (
-                        f"CASE {' '.join(val_branches)} ELSE {base} END"
-                        if val_branches
-                        else base
-                    )
-                    exprs.append(f"{sql} AS `{_bq(colname)}`")
-                return exprs
-
-            # Post-image values for kept/updated rows.
-            out_cols = post_exprs(True, True)
-
-            rid_cols = ["target.`_row_id` AS `__row_id`"] if rt else []
-            survivors = acted.where(
-                "__action NOT LIKE 'delete%'"
-            ).selectExpr(*out_cols, *rid_cols)
-
-            # 3. Inserts: the S rows that matched no target row (rows in
-            #    stat-pruned files can't match the equi-key, so the pruned
-            #    target suffices). A cheap projection of the persisted S —
-            #    no second target-side join.
-            inserts = None
-            ins_parts = []
-            for j, cl in enumerate(insert_clauses):
-                part = s_joined.where(f"__action = 'insert{j}'")
-                if cl.assignments == "*" or cl.assignments is None:
-                    proj = [
-                        (
-                            f"source.`{_bq(c)}`"
-                            if c in src_cols
-                            else "NULL"
+                        val_branches.append(
+                            f"WHEN __action = 'update{i}' THEN {e}"
                         )
-                        + f" AS `{_bq(c)}`"
-                        for c in tgt_cols
-                    ]
-                else:
-                    proj = [
-                        (
-                            f"({cl.assignments[c]})"
-                            if c in cl.assignments
-                            else "NULL"
+                if include_bs:
+                    for i, cl in enumerate(by_source_clauses):
+                        if cl.kind != "update_by_source":
+                            continue
+                        # by-source: no source row — assignments are
+                        # target-only SQL (dict form enforced at entry)
+                        e = (
+                            f"({cl.assignments[colname]})"
+                            if colname in cl.assignments
+                            else target_or_null_sql(colname)
                         )
-                        + f" AS `{_bq(c)}`"
-                        for c in tgt_cols
-                    ]
-                ins_parts.append(part.selectExpr(*proj))
-            if ins_parts:
-                inserts = ins_parts[0]
-                for p in ins_parts[1:]:
-                    inserts = inserts.unionByName(p)
-
-            # GENERATED ALWAYS AS IDENTITY under MERGE: inserts generate
-            # fresh values (the projection above filled them with NULL);
-            # supplying one — via an explicit assignment, an INSERT * whose
-            # source carries the column, or an UPDATE SET — is rejected,
-            # matching the append/overwrite contract. The generated ids are
-            # evaluated by exactly ONE action (the insert stage write; the
-            # change feed synthesizes inserts from the staged files), so no
-            # checkpoint is needed to pin them.
-            idcols = self.identity_columns()
-            if idcols:
-                src_cols_all = set(source.columns)
-                for icol in idcols:
-                    for cl in clauses:
-                        explicit = (
-                            isinstance(cl.assignments, dict)
-                            and icol in cl.assignments
+                        val_branches.append(
+                            f"WHEN __action = 'update_by_source{i}' THEN {e}"
                         )
-                        star_supplied = (
-                            cl.kind in ("insert", "update")
-                            and (cl.assignments == "*" or cl.assignments is None)
-                            and icol in src_cols_all
+                base = target_or_null_sql(colname)
+                sql = (
+                    f"CASE {' '.join(val_branches)} ELSE {base} END"
+                    if val_branches
+                    else base
+                )
+                exprs.append(f"{sql} AS `{_bq(colname)}`")
+            return exprs
+
+        # Post-image values for kept/updated rows.
+        out_cols = post_exprs(True, True)
+
+        rid_cols = ["target.`_row_id` AS `__row_id`"] if rt else []
+        survivors = acted.where(
+            "__action NOT LIKE 'delete%'"
+        ).selectExpr(*out_cols, *rid_cols)
+
+        # 3. Inserts: the S rows that matched no target row (rows in
+        #    stat-pruned files can't match the equi-key, so the pruned
+        #    target suffices). A cheap projection of the persisted S —
+        #    no second target-side join.
+        inserts = None
+        ins_parts = []
+        for j, cl in enumerate(insert_clauses):
+            part = s_joined.where(f"__action = 'insert{j}'")
+            if cl.assignments == "*" or cl.assignments is None:
+                proj = [
+                    (
+                        f"source.`{_bq(c)}`"
+                        if c in src_cols
+                        else "NULL"
+                    )
+                    + f" AS `{_bq(c)}`"
+                    for c in tgt_cols
+                ]
+            else:
+                proj = [
+                    (
+                        f"({cl.assignments[c]})"
+                        if c in cl.assignments
+                        else "NULL"
+                    )
+                    + f" AS `{_bq(c)}`"
+                    for c in tgt_cols
+                ]
+            ins_parts.append(part.selectExpr(*proj))
+        if ins_parts:
+            inserts = ins_parts[0]
+            for p in ins_parts[1:]:
+                inserts = inserts.unionByName(p)
+
+        # GENERATED ALWAYS AS IDENTITY under MERGE: inserts generate
+        # fresh values (the projection above filled them with NULL);
+        # supplying one — via an explicit assignment, an INSERT * whose
+        # source carries the column, or an UPDATE SET — is rejected,
+        # matching the append/overwrite contract. The generated ids are
+        # evaluated by exactly ONE action (the insert stage write; the
+        # change feed synthesizes inserts from the staged files), so no
+        # checkpoint is needed to pin them.
+        idcols = self.identity_columns()
+        if idcols:
+            src_cols_all = set(source.columns)
+            for icol in idcols:
+                for cl in clauses:
+                    explicit = (
+                        isinstance(cl.assignments, dict)
+                        and icol in cl.assignments
+                    )
+                    star_supplied = (
+                        cl.kind in ("insert", "update")
+                        and (cl.assignments == "*" or cl.assignments is None)
+                        and icol in src_cols_all
+                    )
+                    if explicit or star_supplied:
+                        raise ValueError(
+                            f"{icol} is GENERATED ALWAYS AS IDENTITY — "
+                            "MERGE may not assign it"
                         )
-                        if explicit or star_supplied:
-                            raise ValueError(
-                                f"{icol} is GENERATED ALWAYS AS IDENTITY — "
-                                "MERGE may not assign it"
-                            )
-                if inserts is not None:
-                    inserts = self._assign_identity(
-                        inserts.drop(*idcols), idcols
-                    )
+            if inserts is not None:
+                inserts = self._assign_identity(
+                    inserts.drop(*idcols), idcols
+                )
 
-            # Action counts were collected together with the touched-file
-            # probe (one job); just aggregate the clause families.
-            n_ins = sum(
-                action_counts.get(f"insert{j}", 0) for j in range(len(insert_clauses))
-            )
-            del_actions = [f"delete{i}" for i, cl in enumerate(matched_clauses) if cl.kind == "delete"]
-            upd_actions = [f"update{i}" for i, cl in enumerate(matched_clauses) if cl.kind == "update"]
-            bs_del_actions = [
-                f"{cl.kind}{i}"
-                for i, cl in enumerate(by_source_clauses)
-                if cl.kind == "delete_by_source"
-            ]
-            bs_upd_actions = [
-                f"{cl.kind}{i}"
-                for i, cl in enumerate(by_source_clauses)
-                if cl.kind == "update_by_source"
-            ]
-            n_mat_del = sum(action_counts.get(a, 0) for a in del_actions)
-            n_mat_upd = sum(action_counts.get(a, 0) for a in upd_actions)
-            n_bs_del = sum(action_counts.get(a, 0) for a in bs_del_actions)
-            n_bs_upd = sum(action_counts.get(a, 0) for a in bs_upd_actions)
-            n_del = n_mat_del + n_bs_del
-            n_upd = n_mat_upd + n_bs_upd
+        # Action counts were collected together with the touched-file
+        # probe (one job); just aggregate the clause families.
+        n_ins = sum(
+            action_counts.get(f"insert{j}", 0) for j in range(len(insert_clauses))
+        )
+        del_actions = [f"delete{i}" for i, cl in enumerate(matched_clauses) if cl.kind == "delete"]
+        upd_actions = [f"update{i}" for i, cl in enumerate(matched_clauses) if cl.kind == "update"]
+        bs_del_actions = [
+            f"{cl.kind}{i}"
+            for i, cl in enumerate(by_source_clauses)
+            if cl.kind == "delete_by_source"
+        ]
+        bs_upd_actions = [
+            f"{cl.kind}{i}"
+            for i, cl in enumerate(by_source_clauses)
+            if cl.kind == "update_by_source"
+        ]
+        n_mat_del = sum(action_counts.get(a, 0) for a in del_actions)
+        n_mat_upd = sum(action_counts.get(a, 0) for a in upd_actions)
+        n_bs_del = sum(action_counts.get(a, 0) for a in bs_del_actions)
+        n_bs_upd = sum(action_counts.get(a, 0) for a in bs_upd_actions)
+        n_del = n_mat_del + n_bs_del
+        n_upd = n_mat_upd + n_bs_upd
 
-            # On a CDF-enabled table, survivors and inserts are staged
-            # SEPARATELY: insert rows then live in files of their own,
-            # flagged "ins" in the commit's add entries, and read_changes
-            # synthesizes their change rows from those files — so the CDF
-            # materialization below carries only the update/delete images
-            # (O(changed rows)), never a second copy of every inserted row.
-            # An insert-only merge (the initial CDC load) writes its data
-            # exactly once and skips the CDF job entirely. Without CDF the
-            # split buys nothing, so both parts ride one staged write.
-            adds, written_rows = ([], 0)
-            touched_total = 0
-            if touched:
-                # optimized write: output size is known exactly from the
-                # log's per-file row counts — survivors = touched - deletes
-                active_rows = {
-                    rel: a.get("rows", 0)
-                    for rel, a in self._state()["active"].items()
-                }
-                touched_total = sum(
-                    active_rows.get(self._rel_of(f), 0) for f in touched
-                )
-            # Provably-micro write jobs skip AQE's query-stage overhead:
-            # both sizes are EXACT by now — the source from the plan probe
-            # (every source row landed in one action count), the rewrite
-            # from the log's per-file row counts — so the gate never
-            # misfires on a big write (cf. the broadcast hint above).
-            micro_jobs = (
-                sum(action_counts.values()) <= 100_000
-                and touched_total + n_ins <= 1_000_000
-            )
-            # ... and a provably-micro merge that pays a CDF job ANYWAY
-            # (update/delete images present) rides its insert rows on ONE
-            # unified staged write and materializes their change rows into
-            # the sidecar it is already writing — one write action fewer
-            # per micro-batch merge, identical feed content. At scale
-            # (micro gate off) the split stays: inserts dominate big
-            # merges and doubling their bytes into the sidecar is the
-            # wrong trade there. Identity-bearing tables also keep the
-            # split: generated ids must be evaluated by exactly ONE action
-            # (the unified path would evaluate the insert projection in
-            # both the data write and the CDF write).
-            unify_inserts = (
-                self.cdf_enabled()
-                and n_ins > 0
-                and micro_jobs
-                and (n_del + n_upd) > 0
-                and not idcols
-            )
-            split_inserts = (
-                self.cdf_enabled() and n_ins > 0 and not unify_inserts
-            )
-            if split_inserts:
-                if touched:
-                    with _micro_plan_mode(self.spark, micro_jobs):
-                        adds, written_rows = self._stage_write(
-                            self._align(
-                                survivors, write_schema, keep=("__row_id",)
-                            ),
-                            expected_rows=touched_total - n_del,
-                        )
-                with _micro_plan_mode(self.spark, micro_jobs):
-                    ins_adds, ins_rows = self._stage_write(
-                        self._align(inserts, write_schema), expected_rows=n_ins
-                    )
-                for a in ins_adds:
-                    a["ins"] = True
-                adds = adds + ins_adds
-                written_rows += ins_rows
-            elif touched or n_ins:
-                if not touched and inserts is not None:
-                    # insert-only commit (e.g. empty-target fast path): the
-                    # survivors frame is provably empty — don't union its
-                    # (join-shaped) plan into the write
-                    new_data = self._align(inserts, write_schema)
-                else:
-                    new_data = self._align(
-                        survivors, write_schema, keep=("__row_id",)
-                    )
-                    if inserts is not None:
-                        # inserts carry no __row_id (fresh ids derive from
-                        # the new file's base); allowMissingColumns fills it
-                        new_data = new_data.unionByName(
-                            self._align(inserts, write_schema),
-                            allowMissingColumns=True,
-                        )
-                with _micro_plan_mode(self.spark, micro_jobs):
-                    adds, written_rows = self._stage_write(
-                        new_data, expected_rows=touched_total - n_del + n_ins
-                    )
-
-            # 4. Change-data-feed rows for this commit (materialized:
-            #    update/delete images touch a sparse subset, so
-            #    synthesis-from-files can't express them; inserts are
-            #    synthesized from the flagged files instead).
-            cdf_rel = None
-            pre_cols = [
-                f"{target_or_null_sql(c)} AS `{_bq(c)}`" for c in tgt_cols
-            ]
-            cdf_parts = []
-            if n_mat_del:
-                d = s_joined.where(
-                    F.col("__action").isin(del_actions)
-                ).selectExpr(*pre_cols)
-                cdf_parts.append(
-                    self._align(d, write_schema).withColumn(CHANGE_TYPE, F.lit("delete"))
-                )
-            if n_mat_upd:
-                upd_rows = s_joined.where(F.col("__action").isin(upd_actions))
-                pre = upd_rows.selectExpr(*pre_cols)
-                post = upd_rows.selectExpr(*post_exprs(True, False))
-                cdf_parts.append(
-                    self._align(pre, write_schema).withColumn(
-                        CHANGE_TYPE, F.lit("update_preimage")
-                    )
-                )
-                cdf_parts.append(
-                    self._align(post, write_schema).withColumn(
-                        CHANGE_TYPE, F.lit("update_postimage")
-                    )
-                )
-            # by-source images come from the persisted target-sided probe
-            # (bs_fired) — the source-sided S has no by-source rows
-            if n_bs_del:
-                d = bs_fired.where(
-                    F.col("__action").isin(bs_del_actions)
-                ).selectExpr(*pre_cols)
-                cdf_parts.append(
-                    self._align(d, write_schema).withColumn(
-                        CHANGE_TYPE, F.lit("delete")
-                    )
-                )
-            if n_bs_upd:
-                bsu = bs_fired.where(F.col("__action").isin(bs_upd_actions))
-                cdf_parts.append(
-                    self._align(
-                        bsu.selectExpr(*pre_cols), write_schema
-                    ).withColumn(CHANGE_TYPE, F.lit("update_preimage"))
-                )
-                cdf_parts.append(
-                    self._align(
-                        bsu.selectExpr(*post_exprs(False, True)), write_schema
-                    ).withColumn(CHANGE_TYPE, F.lit("update_postimage"))
-                )
-            if unify_inserts and inserts is not None:
-                # unified micro path: insert change rows ride the sidecar
-                # the update/delete images are writing anyway (their file
-                # copies are NOT ins-flagged, so read_changes never
-                # synthesizes a second delivery). Deterministic across the
-                # two consuming actions: inserts project the PERSISTED
-                # planning frame.
-                cdf_parts.append(
-                    self._align(inserts, write_schema).withColumn(
-                        CHANGE_TYPE, F.lit("insert")
-                    )
-                )
-            if self.cdf_enabled() and cdf_parts:
-                cdf_all = cdf_parts[0]
-                for p in cdf_parts[1:]:
-                    cdf_all = cdf_all.unionByName(p)
-                # the CDF materialization is O(changed rows) — micro
-                # whenever the write jobs are (same exact-count gate)
-                with _micro_plan_mode(self.spark, micro_jobs):
-                    cdf_rel = self._write_cdf(
-                        cdf_all,
-                        expected_rows=n_del
-                        + 2 * n_upd
-                        + (n_ins if unify_inserts else 0),
-                    )
-
-            metrics = {
-                "num_touched_files": len(touched),
-                "num_deleted_rows": n_del,
-                "num_updated_rows": n_upd,
-                "num_inserted_rows": n_ins,
-                "num_written_rows": written_rows,
+        # On a CDF-enabled table, survivors and inserts are staged
+        # SEPARATELY: insert rows then live in files of their own,
+        # flagged "ins" in the commit's add entries, and read_changes
+        # synthesizes their change rows from those files — so the CDF
+        # materialization below carries only the update/delete images
+        # (O(changed rows)), never a second copy of every inserted row.
+        # An insert-only merge (the initial CDC load) writes its data
+        # exactly once and skips the CDF job entirely. Without CDF the
+        # split buys nothing, so both parts ride one staged write.
+        adds, written_rows = ([], 0)
+        touched_total = 0
+        if touched:
+            # optimized write: output size is known exactly from the
+            # log's per-file row counts — survivors = touched - deletes
+            active_rows = {
+                rel: a.get("rows", 0)
+                for rel, a in self._state()["active"].items()
             }
-            v = snapshot_version + 1
-            touched_rel = [self._rel_of(f) for f in touched]
-            dvmap = self._state().get("dv") or {}
-            lakelog.write_commit(
-                self.path,
-                Commit(
-                    version=v,
-                    operation="MERGE",
-                    timestamp_ms=lakelog.now_ms(),
-                    add=adds,
-                    remove=touched_rel + self._dv_release(touched_rel, dvmap),
-                    cdf_path=cdf_rel,
-                    schema_json=schema_json,
-                    properties={
-                        **(
-                            self._identity_hwm_props(
-                                adds, self.identity_columns()
-                            )
-                            if adds and self.identity_columns()
-                            else {}
-                        ),
-                        **(
-                            {f"txn.{txn_app_id}": str(txn_version)}
-                            if txn_app_id is not None
-                            else {}
-                        ),
-                    },
-                    metrics=metrics,
-                ),
+            touched_total = sum(
+                active_rows.get(self._rel_of(f), 0) for f in touched
             )
-            metrics["version"] = v
-            self._maybe_auto_compact()
-            return metrics
-        finally:
-            s_joined.unpersist()
-            src_persisted.unpersist()
-            if bs_fired is not None:
-                bs_fired.unpersist()
+        # Provably-micro write jobs skip AQE's query-stage overhead:
+        # both sizes are EXACT by now — the source from the plan probe
+        # (every source row landed in one action count), the rewrite
+        # from the log's per-file row counts — so the gate never
+        # misfires on a big write (cf. the broadcast hint above).
+        micro_jobs = (
+            sum(action_counts.values()) <= 100_000
+            and touched_total + n_ins <= 1_000_000
+        )
+        jobs_conf = MICRO_PLAN_CONF if micro_jobs else {}
+        # ... and a provably-micro merge that pays a CDF job ANYWAY
+        # (update/delete images present) rides its insert rows on ONE
+        # unified staged write and materializes their change rows into
+        # the sidecar it is already writing — one write action fewer
+        # per micro-batch merge, identical feed content. At scale
+        # (micro gate off) the split stays: inserts dominate big
+        # merges and doubling their bytes into the sidecar is the
+        # wrong trade there. Identity-bearing tables also keep the
+        # split: generated ids must be evaluated by exactly ONE action
+        # (the unified path would evaluate the insert projection in
+        # both the data write and the CDF write).
+        unify_inserts = (
+            self.cdf_enabled()
+            and n_ins > 0
+            and micro_jobs
+            and (n_del + n_upd) > 0
+            and not idcols
+        )
+        split_inserts = (
+            self.cdf_enabled() and n_ins > 0 and not unify_inserts
+        )
+        if split_inserts:
+            if touched:
+                with conf_scope(self.spark, jobs_conf):
+                    adds, written_rows = self._stage_write(
+                        self._align(
+                            survivors, write_schema, keep=("__row_id",)
+                        ),
+                        expected_rows=touched_total - n_del,
+                    )
+            with conf_scope(self.spark, jobs_conf):
+                ins_adds, ins_rows = self._stage_write(
+                    self._align(inserts, write_schema), expected_rows=n_ins
+                )
+            for a in ins_adds:
+                a["ins"] = True
+            adds = adds + ins_adds
+            written_rows += ins_rows
+        elif touched or n_ins:
+            if not touched and inserts is not None:
+                # insert-only commit (e.g. empty-target fast path): the
+                # survivors frame is provably empty — don't union its
+                # (join-shaped) plan into the write
+                new_data = self._align(inserts, write_schema)
+            else:
+                new_data = self._align(
+                    survivors, write_schema, keep=("__row_id",)
+                )
+                if inserts is not None:
+                    # inserts carry no __row_id (fresh ids derive from
+                    # the new file's base); allowMissingColumns fills it
+                    new_data = new_data.unionByName(
+                        self._align(inserts, write_schema),
+                        allowMissingColumns=True,
+                    )
+            with conf_scope(self.spark, jobs_conf):
+                adds, written_rows = self._stage_write(
+                    new_data, expected_rows=touched_total - n_del + n_ins
+                )
+
+        # 4. Change-data-feed rows for this commit (materialized:
+        #    update/delete images touch a sparse subset, so
+        #    synthesis-from-files can't express them; inserts are
+        #    synthesized from the flagged files instead).
+        cdf_rel = None
+        pre_cols = [
+            f"{target_or_null_sql(c)} AS `{_bq(c)}`" for c in tgt_cols
+        ]
+        cdf_parts = []
+        if n_mat_del:
+            d = s_joined.where(
+                F.col("__action").isin(del_actions)
+            ).selectExpr(*pre_cols)
+            cdf_parts.append(
+                self._align(d, write_schema).withColumn(CHANGE_TYPE, F.lit("delete"))
+            )
+        if n_mat_upd:
+            upd_rows = s_joined.where(F.col("__action").isin(upd_actions))
+            pre = upd_rows.selectExpr(*pre_cols)
+            post = upd_rows.selectExpr(*post_exprs(True, False))
+            cdf_parts.append(
+                self._align(pre, write_schema).withColumn(
+                    CHANGE_TYPE, F.lit("update_preimage")
+                )
+            )
+            cdf_parts.append(
+                self._align(post, write_schema).withColumn(
+                    CHANGE_TYPE, F.lit("update_postimage")
+                )
+            )
+        # by-source images come from the persisted target-sided probe
+        # (bs_fired) — the source-sided S has no by-source rows
+        if n_bs_del:
+            d = bs_fired.where(
+                F.col("__action").isin(bs_del_actions)
+            ).selectExpr(*pre_cols)
+            cdf_parts.append(
+                self._align(d, write_schema).withColumn(
+                    CHANGE_TYPE, F.lit("delete")
+                )
+            )
+        if n_bs_upd:
+            bsu = bs_fired.where(F.col("__action").isin(bs_upd_actions))
+            cdf_parts.append(
+                self._align(
+                    bsu.selectExpr(*pre_cols), write_schema
+                ).withColumn(CHANGE_TYPE, F.lit("update_preimage"))
+            )
+            cdf_parts.append(
+                self._align(
+                    bsu.selectExpr(*post_exprs(False, True)), write_schema
+                ).withColumn(CHANGE_TYPE, F.lit("update_postimage"))
+            )
+        if unify_inserts and inserts is not None:
+            # unified micro path: insert change rows ride the sidecar
+            # the update/delete images are writing anyway (their file
+            # copies are NOT ins-flagged, so read_changes never
+            # synthesizes a second delivery). Deterministic across the
+            # two consuming actions: inserts project the PERSISTED
+            # planning frame.
+            cdf_parts.append(
+                self._align(inserts, write_schema).withColumn(
+                    CHANGE_TYPE, F.lit("insert")
+                )
+            )
+        if self.cdf_enabled() and cdf_parts:
+            cdf_all = cdf_parts[0]
+            for p in cdf_parts[1:]:
+                cdf_all = cdf_all.unionByName(p)
+            # the CDF materialization is O(changed rows) — micro
+            # whenever the write jobs are (same exact-count gate)
+            with conf_scope(self.spark, jobs_conf):
+                cdf_rel = self._write_cdf(
+                    cdf_all,
+                    expected_rows=n_del
+                    + 2 * n_upd
+                    + (n_ins if unify_inserts else 0),
+                )
+
+        metrics = {
+            "num_touched_files": len(touched),
+            "num_deleted_rows": n_del,
+            "num_updated_rows": n_upd,
+            "num_inserted_rows": n_ins,
+            "num_written_rows": written_rows,
+        }
+        v = snapshot_version + 1
+        touched_rel = [self._rel_of(f) for f in touched]
+        dvmap = self._state().get("dv") or {}
+        lakelog.write_commit(
+            self.path,
+            Commit(
+                version=v,
+                operation="MERGE",
+                timestamp_ms=lakelog.now_ms(),
+                add=adds,
+                remove=touched_rel + self._dv_release(touched_rel, dvmap),
+                cdf_path=cdf_rel,
+                schema_json=schema_json,
+                properties={
+                    **(
+                        self._identity_hwm_props(
+                            adds, self.identity_columns()
+                        )
+                        if adds and self.identity_columns()
+                        else {}
+                    ),
+                    **(
+                        {f"txn.{txn_app_id}": str(txn_version)}
+                        if txn_app_id is not None
+                        else {}
+                    ),
+                },
+                metrics=metrics,
+            ),
+        )
+        metrics["version"] = v
+        self._maybe_auto_compact()
+        return metrics
 
     # ------------------------------------------------------------- change feed
 

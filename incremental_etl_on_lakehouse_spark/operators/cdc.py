@@ -47,6 +47,7 @@ from incremental_etl_on_lakehouse_spark.lake.table import (
     LakeTable,
     MergeClause,
     maintenance_plan_scope,
+    persist_scope,
 )
 
 
@@ -318,45 +319,43 @@ def scd2_merge(
     # dimension's input bytes): persist() compiles the cached plan at call
     # time, so an AQE-on persist pays one query-stage job per Exchange
     # every time the cache materializes — pure fixed cost at micro scale.
-    with maintenance_plan_scope(table.spark, batch, current):
-        joined = deduped.join(current, on=join_cond, how="left").persist()
-    changed = joined.where(
-        F.col("__t_hash").isNotNull() & (F.col(hash_col) != F.col("__t_hash"))
-    ).select(*data_cols)
-    brand_new = joined.where(F.col("__t_hash").isNull()).select(*data_cols)
-    mk = lambda df, key: df.select(  # noqa: E731
-        *data_cols,
-        *(
-            [F.col(k).alias(f"__merge_{k}") for k in key_cols]
-            if key
-            else [F.lit(None).cast(df.schema[k].dataType).alias(f"__merge_{k}") for k in key_cols]
-        ),
-    )
-    staged = mk(changed, True).unionByName(mk(changed, False)).unionByName(
-        mk(brand_new, True)
-    )
-    cond = " AND ".join(
-        f"source.`__merge_{k}` = target.`{k}`" for k in key_cols
-    ) + f" AND target.`{current_col}`"
-    insert_assignments = {c: f"source.`{c}`" for c in data_cols}
-    insert_assignments[start_col] = f"source.`{ts_col}`"
-    insert_assignments[end_col] = "NULL"
-    insert_assignments[current_col] = "true"
-    clauses = [
-        MergeClause(
-            "update",
-            None,
-            {end_col: f"source.`{ts_col}`", current_col: "false"},
-        ),
-        MergeClause("insert", None, insert_assignments),
-    ]
-    try:
+    with persist_scope() as persist:
+        with maintenance_plan_scope(table.spark, batch, current):
+            joined = persist(deduped.join(current, on=join_cond, how="left"))
+        changed = joined.where(
+            F.col("__t_hash").isNotNull() & (F.col(hash_col) != F.col("__t_hash"))
+        ).select(*data_cols)
+        brand_new = joined.where(F.col("__t_hash").isNull()).select(*data_cols)
+        mk = lambda df, key: df.select(  # noqa: E731
+            *data_cols,
+            *(
+                [F.col(k).alias(f"__merge_{k}") for k in key_cols]
+                if key
+                else [F.lit(None).cast(df.schema[k].dataType).alias(f"__merge_{k}") for k in key_cols]
+            ),
+        )
+        staged = mk(changed, True).unionByName(mk(changed, False)).unionByName(
+            mk(brand_new, True)
+        )
+        cond = " AND ".join(
+            f"source.`__merge_{k}` = target.`{k}`" for k in key_cols
+        ) + f" AND target.`{current_col}`"
+        insert_assignments = {c: f"source.`{c}`" for c in data_cols}
+        insert_assignments[start_col] = f"source.`{ts_col}`"
+        insert_assignments[end_col] = "NULL"
+        insert_assignments[current_col] = "true"
+        clauses = [
+            MergeClause(
+                "update",
+                None,
+                {end_col: f"source.`{ts_col}`", current_col: "false"},
+            ),
+            MergeClause("insert", None, insert_assignments),
+        ]
         return table.merge(
             staged, cond, clauses,
             stats_prune={k: f"__merge_{k}" for k in key_cols},
         )
-    finally:
-        joined.unpersist()
 
 
 def cdf_signed_deltas(
@@ -425,10 +424,12 @@ def incremental_minmax_update(
     # otherwise each pay AQE query-stage jobs per Exchange — pure fixed
     # cost when every input (batch, state, pinned base) is provably micro;
     # a big input keeps AQE because the byte gate won't fire
-    with maintenance_plan_scope(gold.spark, changes, base, gold.to_df()) as micro:
+    with maintenance_plan_scope(
+        gold.spark, changes, base, gold.to_df()
+    ) as micro, persist_scope() as persist:
         return _incremental_minmax_update_impl(
             gold, base, changes, group_cols, value_col,
-            min_col, max_col, change_type_col, micro,
+            min_col, max_col, change_type_col, micro, persist,
         )
 
 
@@ -441,7 +442,8 @@ def _incremental_minmax_update_impl(
     min_col: str,
     max_col: str,
     change_type_col: str,
-    micro: bool = False,
+    micro: bool,
+    persist,
 ) -> None:
     # broadcast hints are scope-aware: in micro scope a hint would force a
     # dedicated broadcast-build job the 1-task join doesn't need
@@ -495,98 +497,96 @@ def _incremental_minmax_update_impl(
     # persisted: the classification probe, the mono/recompute branches and
     # the merge source all read this O(batch groups) frame — without the
     # cache the change-feed aggregation re-runs per consumer (guide §2.3)
-    joined = ar.join(cur_r, cur_cond, "left").drop(
-        *[f"__c_{c}" for c in group_cols]
+    joined = persist(
+        ar.join(cur_r, cur_cond, "left").drop(
+            *[f"__c_{c}" for c in group_cols]
+        )
     )
-    joined.persist()
-    try:
-        has_rem = F.col("__dec_min").isNotNull()
-        need_recompute = has_rem & (
+    has_rem = F.col("__dec_min").isNotNull()
+    need_recompute = has_rem & (
+        F.col("__cur_min").isNull()
+        | (F.col("__dec_min") <= F.col("__cur_min"))
+        | (F.col("__dec_max") >= F.col("__cur_max"))
+    )
+    recompute_groups = joined.where(need_recompute).select(*group_cols)
+    is_mono = (~need_recompute) & (
+        F.col("__inc_min").isNotNull()
+        & (
             F.col("__cur_min").isNull()
-            | (F.col("__dec_min") <= F.col("__cur_min"))
-            | (F.col("__dec_max") >= F.col("__cur_max"))
+            | (F.col("__inc_min") < F.col("__cur_min"))
+            | (F.col("__inc_max") > F.col("__cur_max"))
         )
-        recompute_groups = joined.where(need_recompute).select(*group_cols)
-        is_mono = (~need_recompute) & (
-            F.col("__inc_min").isNotNull()
-            & (
-                F.col("__cur_min").isNull()
-                | (F.col("__inc_min") < F.col("__cur_min"))
-                | (F.col("__inc_max") > F.col("__cur_max"))
+    )
+    # monotone groups: additions only touch extremes outward; rows with no
+    # possible change are excluded so a no-op batch rewrites zero files
+    mono = joined.where(is_mono).select(
+        *group_cols,
+        F.least("__inc_min", "__cur_min").alias(min_col),
+        F.greatest("__inc_max", "__cur_max").alias(max_col),
+        F.lit("UPSERT").alias("__op"),
+    )
+    # Gate the base-table branch on an actual recompute being needed, and
+    # the merge on anything changing at all — ONE classification job over
+    # the persisted micro-batch-scale aggregate (the previous shape paid
+    # two isEmpty jobs: one here, one on the assembled source). In the
+    # common all-monotone batch the base table is never scanned at all.
+    # Equivalence of the single probe: with recomputes present the merge
+    # source is never empty (every recompute group lands in exactly one of
+    # recomputed/vanished), so the old source.isEmpty() early-return could
+    # only fire in the recompute-free case — which n_mono == 0 covers.
+    counts = joined.select(
+        F.sum(F.when(need_recompute, 1).otherwise(0)).alias("__n_rec"),
+        F.sum(F.when(is_mono, 1).otherwise(0)).alias("__n_mono"),
+    ).collect()[0]
+    n_rec = counts["__n_rec"] or 0
+    n_mono = counts["__n_mono"] or 0
+    if n_rec == 0 and n_mono == 0:
+        return  # nothing can change: no commit, no file writes
+    if n_rec == 0:
+        source = mono
+    else:
+        rg_r, rg_cond = _ns(base, recompute_groups, "__rg_")
+        recomputed = (
+            base.join(bc(rg_r), rg_cond, "left_semi")
+            .groupBy(*group_cols)
+            .agg(
+                F.min(value_col).alias(min_col),
+                F.max(value_col).alias(max_col),
             )
         )
-        # monotone groups: additions only touch extremes outward; rows with no
-        # possible change are excluded so a no-op batch rewrites zero files
-        mono = joined.where(is_mono).select(
+        rc_r, rc_cond = _ns(recompute_groups, recomputed, "__rc_")
+        vanished = recompute_groups.join(
+            rc_r, rc_cond, "left_anti"
+        ).select(
             *group_cols,
-            F.least("__inc_min", "__cur_min").alias(min_col),
-            F.greatest("__inc_max", "__cur_max").alias(max_col),
-            F.lit("UPSERT").alias("__op"),
+            *[
+                F.lit(None).cast(gold.schema()[c].dataType).alias(c)
+                for c in (min_col, max_col)
+            ],
+            F.lit("DELETE").alias("__op"),
         )
-        # Gate the base-table branch on an actual recompute being needed, and
-        # the merge on anything changing at all — ONE classification job over
-        # the persisted micro-batch-scale aggregate (the previous shape paid
-        # two isEmpty jobs: one here, one on the assembled source). In the
-        # common all-monotone batch the base table is never scanned at all.
-        # Equivalence of the single probe: with recomputes present the merge
-        # source is never empty (every recompute group lands in exactly one of
-        # recomputed/vanished), so the old source.isEmpty() early-return could
-        # only fire in the recompute-free case — which n_mono == 0 covers.
-        counts = joined.select(
-            F.sum(F.when(need_recompute, 1).otherwise(0)).alias("__n_rec"),
-            F.sum(F.when(is_mono, 1).otherwise(0)).alias("__n_mono"),
-        ).collect()[0]
-        n_rec = counts["__n_rec"] or 0
-        n_mono = counts["__n_mono"] or 0
-        if n_rec == 0 and n_mono == 0:
-            return  # nothing can change: no commit, no file writes
-        if n_rec == 0:
-            source = mono
-        else:
-            rg_r, rg_cond = _ns(base, recompute_groups, "__rg_")
-            recomputed = (
-                base.join(bc(rg_r), rg_cond, "left_semi")
-                .groupBy(*group_cols)
-                .agg(
-                    F.min(value_col).alias(min_col),
-                    F.max(value_col).alias(max_col),
-                )
-            )
-            rc_r, rc_cond = _ns(recompute_groups, recomputed, "__rc_")
-            vanished = recompute_groups.join(
-                rc_r, rc_cond, "left_anti"
-            ).select(
-                *group_cols,
-                *[
-                    F.lit(None).cast(gold.schema()[c].dataType).alias(c)
-                    for c in (min_col, max_col)
-                ],
-                F.lit("DELETE").alias("__op"),
-            )
-            source = (
-                recomputed.withColumn("__op", F.lit("UPSERT"))
-                .unionByName(vanished)
-                .unionByName(mono)
-            )
-        # null-safe equality: a NULL group key is a legal GROUP BY group;
-        # with plain `=` its state row would never match and every refresh
-        # would insert a duplicate partial row
-        cond = " AND ".join(
-            f"source.`{k}` <=> target.`{k}`" for k in group_cols
+        source = (
+            recomputed.withColumn("__op", F.lit("UPSERT"))
+            .unionByName(vanished)
+            .unionByName(mono)
         )
-        assignments = {c: f"source.`{c}`" for c in (min_col, max_col)}
-        insert_assignments = {k: f"source.`{k}`" for k in group_cols}
-        insert_assignments.update(assignments)
-        clauses = [
-            MergeClause("delete", "source.`__op` = 'DELETE'"),
-            MergeClause("update", "source.`__op` = 'UPSERT'", assignments),
-            MergeClause(
-                "insert", "source.`__op` <> 'DELETE'", insert_assignments
-            ),
-        ]
-        gold.merge(source, cond, clauses)
-    finally:
-        joined.unpersist()
+    # null-safe equality: a NULL group key is a legal GROUP BY group;
+    # with plain `=` its state row would never match and every refresh
+    # would insert a duplicate partial row
+    cond = " AND ".join(
+        f"source.`{k}` <=> target.`{k}`" for k in group_cols
+    )
+    assignments = {c: f"source.`{c}`" for c in (min_col, max_col)}
+    insert_assignments = {k: f"source.`{k}`" for k in group_cols}
+    insert_assignments.update(assignments)
+    clauses = [
+        MergeClause("delete", "source.`__op` = 'DELETE'"),
+        MergeClause("update", "source.`__op` = 'UPSERT'", assignments),
+        MergeClause(
+            "insert", "source.`__op` <> 'DELETE'", insert_assignments
+        ),
+    ]
+    gold.merge(source, cond, clauses)
 
 
 def cdf_multiset_deltas(
@@ -1031,12 +1031,10 @@ class IncrementalAggView:
         # without the persist the CDF read re-runs once per consumer
         # (guide §2.3). Scoped persist: compiled non-adaptive when the
         # batch is provably micro, with AQE kept for big feeds.
-        with maintenance_plan_scope(self.source.spark, changes):
-            changes = changes.persist()
-        try:
+        with persist_scope() as persist:
+            with maintenance_plan_scope(self.source.spark, changes):
+                changes = persist(changes)
             self._apply_persisted(changes, version)
-        finally:
-            changes.unpersist()
 
     def _apply_persisted(self, changes: DataFrame, version: int) -> None:
         sign = F.when(
@@ -1422,10 +1420,12 @@ def incremental_topk_update(
     groups) with the group column in statsColumns for file pruning."""
     # maintenance micro scope: see incremental_minmax_update — the
     # persists/probes below pay per-Exchange AQE jobs otherwise
-    with maintenance_plan_scope(gold.spark, changes, base, gold.to_df()) as micro:
+    with maintenance_plan_scope(
+        gold.spark, changes, base, gold.to_df()
+    ) as micro, persist_scope() as persist:
         return _incremental_topk_update_impl(
             gold, base, changes, group_cols, value_col, k,
-            cnt_col, change_type_col, micro,
+            cnt_col, change_type_col, micro, persist,
         )
 
 
@@ -1438,18 +1438,20 @@ def _incremental_topk_update_impl(
     k: int,
     cnt_col: str,
     change_type_col: str,
-    micro: bool = False,
+    micro: bool,
+    persist,
 ) -> None:
     # scope-aware broadcast hints: see _incremental_minmax_update_impl
     bc = (lambda d: d) if micro else F.broadcast
     # deltas drive the emptiness probe, the group classification, AND the
     # applicable-delta join; persist so the CDF scan + agg run once per
     # batch, not once per consumer (the operator's O(changed keys) claim)
-    deltas = cdf_multiset_deltas(
-        changes, group_cols, value_col, change_type_col=change_type_col
-    ).persist()
+    deltas = persist(
+        cdf_multiset_deltas(
+            changes, group_cols, value_col, change_type_col=change_type_col
+        )
+    )
     if deltas.isEmpty():
-        deltas.unpersist(blocking=False)
         return
     state = gold.to_df()
 
@@ -1475,12 +1477,16 @@ def _incremental_topk_update_impl(
     # persisted: the classification frame (O(touched groups) rows) feeds
     # the recompute probe, the direct-path semi-joins, and the
     # touched-group union — one evaluation, not four
-    cls = touched.join(summ_r, cond, "left").select(
-        *[touched[c] for c in group_cols],
-        "__max_neg",
-        "__kth",
-        F.coalesce(F.col("__n"), F.lit(0)).alias("__n2"),
-    ).withColumnRenamed("__n2", "__n").persist()
+    cls = persist(
+        touched.join(summ_r, cond, "left")
+        .select(
+            *[touched[c] for c in group_cols],
+            "__max_neg",
+            "__kth",
+            F.coalesce(F.col("__n"), F.lit(0)).alias("__n2"),
+        )
+        .withColumnRenamed("__n2", "__n")
+    )
     full = F.col("__n") >= k
     need_recompute = (
         F.col("__max_neg").isNotNull()
@@ -1565,15 +1571,10 @@ def _incremental_topk_update_impl(
     # persisted: the emptiness probe materializes the full plan once and
     # the MERGE's own source persist then reads the cache instead of
     # re-evaluating the direct+recompute+anti-join tree
-    source = (
-        changed.withColumn("__op", F.lit("UPSERT"))
-        .unionByName(vanished)
-        .persist()
+    source = persist(
+        changed.withColumn("__op", F.lit("UPSERT")).unionByName(vanished)
     )
     if source.isEmpty():
-        source.unpersist(blocking=False)
-        cls.unpersist(blocking=False)
-        deltas.unpersist(blocking=False)
         return
     cond = " AND ".join(
         f"source.`{c}` <=> target.`{c}`" for c in [*group_cols, value_col]
@@ -1583,26 +1584,18 @@ def _incremental_topk_update_impl(
         c: f"source.`{c}`" for c in [*group_cols, value_col]
     }
     insert_assignments.update(assignments)
-    try:
-        gold.merge(
-            source,
-            cond,
-            [
-                MergeClause("delete", "source.`__op` = 'DELETE'"),
-                MergeClause(
-                    "update", "source.`__op` = 'UPSERT'", assignments
-                ),
-                MergeClause(
-                    "insert", "source.`__op` <> 'DELETE'", insert_assignments
-                ),
-            ],
-        )
-    finally:
-        # deltas stays cached THROUGH the merge: source.isEmpty() only
-        # materializes partitions up to the first non-empty one, so the
-        # merge's full evaluation still reads the deltas cache. (A probe
-        # failing mid-function can leave these cached until the frames
-        # are GC'd — Spark's ContextCleaner then unpersists them.)
-        source.unpersist(blocking=False)
-        cls.unpersist(blocking=False)
-        deltas.unpersist(blocking=False)
+    # deltas stays cached THROUGH the merge (the scope releases it on
+    # return): source.isEmpty() only materializes partitions up to the
+    # first non-empty one, so the merge's full evaluation still reads the
+    # deltas cache
+    gold.merge(
+        source,
+        cond,
+        [
+            MergeClause("delete", "source.`__op` = 'DELETE'"),
+            MergeClause("update", "source.`__op` = 'UPSERT'", assignments),
+            MergeClause(
+                "insert", "source.`__op` <> 'DELETE'", insert_assignments
+            ),
+        ],
+    )

@@ -210,15 +210,18 @@ def minhash_lsh_pairs(
     consumers (Spark's ReusedExchange — the text is scanned and the
     shingle/minhash partial work done once).
     """
-    # PERSISTED: the signature table feeds FOUR subtrees of the returned
+    # CHECKPOINTED: the signature table feeds FOUR subtrees of the returned
     # plan (both sides of the band self-join and both signature re-attach
     # joins), and the broadcast exchanges the planner picks for the
     # re-attaches defeat ReusedExchange — the measured plan ran the whole
-    # scan -> shingle -> 64-hash pipeline four times. The cache is
-    # O(docs x num_hashes x 8 B) — the compressed signature table, tiny
-    # next to the text — and is released by Spark's ContextCleaner when
-    # the returned frame is dropped.
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k).persist()
+    # scan -> shingle -> 64-hash pipeline four times. The checkpoint is
+    # O(docs x num_hashes x 8 B), tiny next to the text. A lazy LOCAL
+    # checkpoint, not persist(): the returned frame owns it and Spark's
+    # ContextCleaner drops it with that frame, while a persisted plan stays
+    # in the session's CacheManager until something unpersists it.
+    sig = minhash_signatures(
+        df, text_col, id_col, num_hashes, shingle_k
+    ).localCheckpoint(eager=False)
     banded = _band_buckets(sig, num_hashes, bands).select("id", "band", "bucket")
     a = banded.alias("a")
     b = banded.alias("b")
@@ -324,10 +327,10 @@ def simhash_pairs(
     of four 16-bit blocks exactly; bucket on (block_index, block_value) and
     verify the full distance with bit_count(xor).
     """
-    # persisted: both sides of the block self-join consume the signature
-    # table, and without the cache the scan -> tokenize -> 64-sum pipeline
-    # runs twice (same finding as minhash_lsh_pairs). O(docs x 16 B).
-    sig = simhash_signatures(df, text_col, id_col).persist()
+    # checkpointed: both sides of the block self-join consume the signature
+    # table, and without it the scan -> tokenize -> 64-sum pipeline runs
+    # twice (same finding as minhash_lsh_pairs). O(docs x 16 B).
+    sig = simhash_signatures(df, text_col, id_col).localCheckpoint(eager=False)
     blocks = [
         F.struct(
             F.lit(i).alias("blk"),
@@ -384,13 +387,13 @@ def ngram_jaccard_pairs(
     exchange discipline wasn't applied before round 8); the re-attach
     joins ship each doc's shingles once per pair role instead.
     """
-    # persisted: both band-join sides consume the signatures (see
+    # checkpointed: both band-join sides consume the signatures (see
     # minhash_lsh_pairs). The shingle re-attach below deliberately stays
     # UNcached: it is corpus-sized (text-derived arrays), and recomputing
     # it for the two pair roles beats spilling it at 100 TB.
     sigs = minhash_signatures(
         df, text_col, id_col, bands * rows_per_band, shingle_k
-    ).persist()
+    ).localCheckpoint(eager=False)
     banded = sigs.select(
         "id",
         F.explode(

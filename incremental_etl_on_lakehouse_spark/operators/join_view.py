@@ -69,6 +69,7 @@ from incremental_etl_on_lakehouse_spark.lake.table import (
     MergeClause,
     _json_safe,
     maintenance_plan_scope,
+    persist_scope,
 )
 from incremental_etl_on_lakehouse_spark.operators.cdc import (
     merge_agg_deltas,
@@ -579,8 +580,8 @@ class IncrementalChainJoinView:
         return out
 
     def _minmax_source(
-        self, joined: DataFrame, v_new: list[int]
-    ) -> tuple[DataFrame, list[DataFrame]]:
+        self, joined: DataFrame, v_new: list[int], persist
+    ) -> DataFrame:
         """Per-group MIN/MAX updates from the signed join delta, split the
         same way as the single-table ``incremental_minmax_update``:
 
@@ -591,9 +592,9 @@ class IncrementalChainJoinView:
           pinned NEW versions (``_groups_join_snapshot``). Removals
           strictly inside the open interval are provably no-ops.
 
-        Returns (source, persisted-frames-to-release): group cols +
-        ``__mm_set`` marker + the new ``__min_*``/``__max_*`` values for
-        every group whose extremes change."""
+        Returns group cols + ``__mm_set`` marker + the new
+        ``__min_*``/``__max_*`` values for every group whose extremes
+        change."""
         g = self.group_cols
         add_aggs, rem_aggs = [], []
         for c in self._mm_cols:
@@ -629,7 +630,7 @@ class IncrementalChainJoinView:
             F.lit(1).alias("__in_state"),
         )
         st_j, cur_r = self._ns_join(ar, cur, g, "left")
-        st = st_j.drop(*[f"__r_{c}" for c in g]).persist()
+        st = persist(st_j.drop(*[f"__r_{c}" for c in g]))
         touch = F.lit(False)
         grow = F.lit(False)
         for c in self._mm_cols:
@@ -706,13 +707,13 @@ class IncrementalChainJoinView:
                 ],
             )
             source = recomputed.unionByName(vanished).unionByName(mono)
-        return source.withColumn("__mm_set", F.lit(1)), [st]
+        return source.withColumn("__mm_set", F.lit(1))
 
     def _merge_maintenance(
         self,
         agg_deltas: DataFrame,
         delta_cols: list[str],
-        mm_bundle: tuple[DataFrame, list[DataFrame]],
+        mm_source: DataFrame,
         txn_version: int,
     ) -> None:
         """ONE maintenance merge combining the additive deltas with the
@@ -722,7 +723,6 @@ class IncrementalChainJoinView:
         zero sum but moves the min). A single merge keeps the refresh one
         commit and the write-ahead-intent + txn-guard exactly-once story
         unchanged."""
-        mm_source, to_release = mm_bundle
         g = self.group_cols
         src_j, mm_r = self._ns_join(agg_deltas, mm_source, g, "full_outer")
         src = src_j.select(
@@ -764,8 +764,6 @@ class IncrementalChainJoinView:
             txn_app_id=self._txn_app_id,
             txn_version=txn_version,
         )
-        for fr in to_release:
-            fr.unpersist()
 
     # ------------------------------------------------------------ interface
 
@@ -807,13 +805,17 @@ class IncrementalChainJoinView:
         gate = [d for d in raw if d is not None] + [
             t.to_df(version=v_new[i]) for i, t in enumerate(self.tables)
         ]
-        with maintenance_plan_scope(self.tables[0].spark, *gate) as micro:
+        with maintenance_plan_scope(
+            self.tables[0].spark, *gate
+        ) as micro, persist_scope() as persist:
             # scope-aware broadcast hints (see _groups_join_snapshot): in
             # micro scope a hint forces a dedicated broadcast-build job
             # the 1-task joins don't need
             self._scope_micro = micro
             try:
-                return self._refresh_locked(ck, v_old, v_new, raw, applied)
+                return self._refresh_locked(
+                    ck, v_old, v_new, raw, applied, persist
+                )
             finally:
                 self._scope_micro = False
 
@@ -824,11 +826,12 @@ class IncrementalChainJoinView:
         v_new: list[int],
         raw: list[DataFrame | None],
         applied: int,
+        persist,
     ) -> int:
         deltas: list[DataFrame | None] = [
             # persisted: each delta feeds the snapshot-pruning bounds
             # jobs of its term AND the maintenance merge
-            self._signed(d, i).persist() if d is not None else None
+            persist(self._signed(d, i)) if d is not None else None
             for i, d in enumerate(raw)
         ]
         terms = [
@@ -855,7 +858,7 @@ class IncrementalChainJoinView:
             # the signed join delta feeds the additive aggregation, the
             # min/max adds/rems probes, and the publish group set —
             # evaluate it once
-            joined = joined.persist()
+            joined = persist(joined)
 
         sum_srcs = [h[len("__sum_"):] for h in self._hidden_sums]
         nn_srcs = sorted(set(sum_srcs) | set(self._nn_counts.values()))
@@ -863,7 +866,7 @@ class IncrementalChainJoinView:
             joined, self.group_cols, sum_cols=sum_srcs, nn_cols=nn_srcs
         )
         if self._mm_cols:
-            mm_source = self._minmax_source(joined, v_new)
+            mm_source = self._minmax_source(joined, v_new, persist)
             self._merge_maintenance(
                 agg_deltas, delta_cols, mm_source, ck["epoch"] + 1
             )
@@ -883,11 +886,6 @@ class IncrementalChainJoinView:
             # replayed double apply
             changed = joined.select(*self.group_cols).distinct()
             self._publish(changed, ck["epoch"] + 1)
-        if self._mm_cols or self.published is not None:
-            joined.unpersist()
-        for d in deltas:
-            if d is not None:
-                d.unpersist()
         self._ckpt.write(
             {"versions": v_new, "epoch": ck["epoch"] + 1, "intent": None}
         )

@@ -432,10 +432,13 @@ def unigram_lm_score(
 
     toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
     words = df.select(F.col(id_col), F.explode(toks).alias("term"))
-    # persisted O(vocab) model table; (T, V) fold off it instead of
-    # re-exploding the corpus (T = sum of term counts, V = vocab rows —
-    # identical values, one corpus pass fewer)
-    counts = words.groupBy("term").agg(F.count("*").alias("c")).persist()
+    # checkpointed O(vocab) model table (owned by the returned frame, see
+    # dedup.minhash_lsh_pairs); (T, V) fold off it instead of re-exploding
+    # the corpus (T = sum of term counts, V = vocab rows — identical
+    # values, one corpus pass fewer)
+    counts = (
+        words.groupBy("term").agg(F.count("*").alias("c"))
+    ).localCheckpoint(eager=False)
     totals = counts.agg(
         F.sum("c").cast("double").alias("__T"),
         F.count("*").cast("double").alias("__V"),
@@ -669,6 +672,7 @@ def bm25_topk(
     """
     from incremental_etl_on_lakehouse_spark.lake.table import (
         maintenance_plan_scope,
+        persist_scope,
     )
 
     spark = df.sparkSession
@@ -677,17 +681,14 @@ def bm25_topk(
     id_type = docs.schema[0].dataType
     top: list = []
     if terms:
-        with maintenance_plan_scope(spark, df):
-            docs.persist()
-            try:
-                s = stats.collect()[0]
-                dfreq = [s[f"df{i}"] for i in range(len(terms))]
-                if any(dfreq):
-                    top = _bm25_topk_frame(
-                        docs, s["N"], s["toks"], dfreq, id_col, k, k1, b
-                    ).collect()
-            finally:
-                docs.unpersist()
+        with maintenance_plan_scope(spark, df), persist_scope() as persist:
+            persist(docs)
+            s = stats.collect()[0]
+            dfreq = [s[f"df{i}"] for i in range(len(terms))]
+            if any(dfreq):
+                top = _bm25_topk_frame(
+                    docs, s["N"], s["toks"], dfreq, id_col, k, k1, b
+                ).collect()
     return _ranked_relation(spark, top, id_col, id_type)
 
 
@@ -729,13 +730,17 @@ def quality_buckets_by_threshold(
         return scored.select(
             *scored.columns, F.lit(1).cast("int").alias(bucket_col)
         )
-    # persisted: ``scored`` feeds the histogram AND the final assignment,
-    # and the histogram feeds the cumulative window AND the total count —
-    # without the caches the whole upstream scoring pipeline re-ran up to
-    # 3x (measured 18 parquet scans on the bucket-scale key). scored is
-    # O(docs) narrow rows, hist O(distinct rounded scores).
-    scored = scored.persist()
-    hist = scored.groupBy(score_col).agg(F.count("*").alias("__c")).persist()
+    # checkpointed (owned by the returned frame, see
+    # dedup.minhash_lsh_pairs; the caller's ``scored`` plan stays uncached):
+    # ``scored`` feeds the histogram AND the final assignment, and the
+    # histogram feeds the cumulative window AND the total count — without
+    # them the whole upstream scoring pipeline re-ran up to 3x (measured 18
+    # parquet scans on the bucket-scale key). scored is O(docs) narrow
+    # rows, hist O(distinct rounded scores).
+    scored = scored.localCheckpoint(eager=False)
+    hist = (
+        scored.groupBy(score_col).agg(F.count("*").alias("__c"))
+    ).localCheckpoint(eager=False)
     w = Window.orderBy(score_col).rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.select(score_col, F.sum("__c").over(w).alias("__cum"))
     totals = hist.agg(F.sum("__c").alias("__n"))
@@ -816,7 +821,8 @@ def corpus_report(
 def _bpe_run(words: DataFrame, steps: int):
     """Shared BPE merge loop: returns (merges, final_state) where merges
     is the learned rule list and final_state the encoded (wid, freq, pos,
-    sym) symbol table, persisted. One implementation so training and
+    sym) symbol table, materialized as a local checkpoint the returned
+    frame owns (nothing stays persisted). One implementation so training and
     encoding can never diverge on the merge semantics (canonical
     left-to-right application; see bpe_train for the scale notes)."""
     from pyspark.sql import Window
@@ -910,17 +916,16 @@ def _bpe_run_impl(spark, words: DataFrame, steps: int):
             )
             .persist()
         )
-    if retired:
-        # The final st has been persisted but never materialized (only the
-        # NEXT round's collect would have done that); unpersisting its
-        # retired parent first would make the caller's terminal action
-        # recompute the whole multi-round window chain from scratch.
-        # Materialize st while its parent's cache is still alive, THEN
-        # release the retired frames — one O(vocab) count job.
-        st.count()
-    for df_ in retired:
+    # The final st has been persisted but never materialized (only the
+    # NEXT round's collect would have done that); releasing its retired
+    # parent first would make the caller's terminal action recompute the
+    # whole multi-round window chain from scratch. Materialize it as a
+    # local checkpoint while its parent's cache is still alive — one
+    # O(vocab) job — THEN release every persisted round, the last too.
+    final = st.localCheckpoint()
+    for df_ in [*retired, st]:
         df_.unpersist(blocking=False)
-    return merges, st
+    return merges, final
 
 
 def bpe_train(words: DataFrame, steps: int) -> list[tuple[int, str, str, int]]:
@@ -939,8 +944,7 @@ def bpe_train(words: DataFrame, steps: int) -> list[tuple[int, str, str, int]]:
     only when left = right) merge at even offsets, resolved with a
     running max of the last non-candidate seq rather than a second
     (wid, island)-keyed shuffle."""
-    merges, st = _bpe_run(words, steps)
-    st.unpersist(blocking=False)
+    merges, _ = _bpe_run(words, steps)
     return merges
 
 
@@ -959,9 +963,6 @@ def bpe_encode(words: DataFrame, steps: int) -> DataFrame:
     loop's final state — no second pass), then one tiny agg over the
     O(vocab) symbol table."""
     _, st = _bpe_run(words, steps)
-    # the agg consumes the cached final state in the caller's action;
-    # an eager unpersist here would recompute the whole loop when the
-    # caller finally acts on the result
     return st.groupBy(F.col("sym").alias("token")).agg(
         F.countDistinct("wid").cast("long").alias("n_words"),
         F.sum("freq").cast("long").alias("total_count"),

@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 
 from incremental_etl_on_lakehouse_spark.functions import data_hash, to_utc
 from incremental_etl_on_lakehouse_spark.lake import LakeStreamReader, LakeTable
+from incremental_etl_on_lakehouse_spark.lake.table import persist_scope
 from incremental_etl_on_lakehouse_spark.operators.cdc import (
     cdf_signed_deltas,
     merge_agg_delta,
@@ -560,8 +561,10 @@ class CdcMedallionPipeline:
             return
         # input_file_name() must be captured before persist: cached rows
         # no longer carry scan-time file provenance
-        batch_df = batch_df.withColumn("file_name", F.input_file_name()).persist()
-        try:
+        with persist_scope() as persist:
+            batch_df = persist(
+                batch_df.withColumn("file_name", F.input_file_name())
+            )
             bad = batch_df.where(F.col("_corrupt_record").isNotNull())
             if not bad.isEmpty():
                 # txn guard: a crash between this append and the ledger's
@@ -587,8 +590,6 @@ class CdcMedallionPipeline:
                     txn_app_id="pipeline_bronze",
                     txn_version=batch_id,
                 )
-        finally:
-            batch_df.unpersist()
 
     def bronze_to_silver_available(self) -> int:
         """New Bronze commits -> dedup + CDC MERGE into Silver
@@ -613,11 +614,12 @@ class CdcMedallionPipeline:
             # still applies, while replayed older batches stay blocked —
             # a single strict order-column guard would drop it forever.
             src = self.silver_source(batch)
-            if self.expectations:
-                # the expectation counts job and the merge each evaluate
-                # the batch plan — persist so the bronze read runs once
-                src = src.persist()
-            try:
+            with persist_scope() as persist:
+                if self.expectations:
+                    # the expectation counts job and the merge each
+                    # evaluate the batch plan — persist so the bronze read
+                    # runs once
+                    src = persist(src)
                 merge_cdc_batch(
                     silver,
                     self._enforce_expectations(src, version),
@@ -626,9 +628,6 @@ class CdcMedallionPipeline:
                     tiebreak_cols=["insert_timestamp", "record_seq"],
                     order_guard_cols=[self.order_col, "insert_timestamp"],
                 )
-            finally:
-                if self.expectations:
-                    src.unpersist()
 
         return reader.process_available(apply)
 

@@ -473,14 +473,15 @@ def ext_decontaminate_bloom(spark, sf_dir):
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
     corpus = docs.unionByName(planted)
-    # persisted: the benchmark gram set feeds BOTH the bitmap aggregation
-    # and the exact-verify join — without the cache the bench-side shingle
-    # explode + distinct shuffle run twice. O(benchmark grams), the side
-    # that by premise doesn't broadcast but caches fine distributed.
+    # checkpointed (owned by the returned frame, see
+    # dedup.minhash_lsh_pairs): the benchmark gram set feeds BOTH the bitmap
+    # aggregation and the exact-verify join — without it the bench-side
+    # shingle explode + distinct shuffle run twice. O(benchmark grams), the
+    # side that by premise doesn't broadcast but caches fine distributed.
     bgrams = (
         bench.select(F.explode(T.shingles(F.col("text"), 8)).alias("gram"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     cgrams = corpus.select(
         "doc_id", F.explode(T.shingles(F.col("text"), 8)).alias("gram")

@@ -1037,7 +1037,9 @@ def ext_graph_pagerank(spark, sf_dir):
         .agg(F.count("*").alias("w"))
     )
     outd = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-    e = edges.join(outd, "src").persist()
+    # every round joins the edge list: checkpointed once (owned by the
+    # returned frame, see dedup.minhash_lsh_pairs)
+    e = edges.join(outd, "src").localCheckpoint(eager=False)
     nodes = docs.select(F.col("source").alias("node")).distinct()
     nn = nodes.agg(F.count("*").alias("N"))
     base = nodes.crossJoin(F.broadcast(nn))

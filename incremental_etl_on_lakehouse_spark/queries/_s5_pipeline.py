@@ -1055,9 +1055,10 @@ def ext_bm25_topk(spark, sf_dir):
     lexical retrieval scorer; curation pipelines use it to pull
     topic-related subsets). Contributions are fixed to integer micro-units
     before the per-doc sum, making the score invariant to summation order
-    — see operators/text.py: bm25_topk for the scale shape."""
+    — see operators/text.py: bm25_topk for the scale shape. The result is
+    a local relation already in rank order, so it takes no sort."""
     docs = spread(load_table(spark, "documents", sf_dir)).select("doc_id", "text")
-    return T.bm25_topk(docs, ["merge", "stream", "vector"], k=10).orderBy("rank")
+    return T.bm25_topk(docs, ["merge", "stream", "vector"], k=10)
 
 
 @query(

@@ -8,6 +8,7 @@ order (and therefore ``ordered_keys()``) is fixed by the import order in
 
 from __future__ import annotations
 
+from incremental_etl_on_lakehouse_spark.lake.table import conf_scope
 from incremental_etl_on_lakehouse_spark.queries._core import *  # noqa: F401,F403
 
 # ---------------------------------------------------------------------------
@@ -1500,12 +1501,10 @@ def snk_dynamic_partition_overwrite(spark, sf_dir):
         base.where(F.col("event_type") == "purchase")
         .withColumn("cents", F.col("cents") * 2)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         fix.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return (
         back.groupBy("event_type")

@@ -48,6 +48,13 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = kept
+    config._seed_cap_deselected = len(dropped)
+
+
+def pytest_report_collectionfinish(config, start_path, items):
+    n = getattr(config, "_seed_cap_deselected", 0)
+    if n:
+        return f"seed cap active: {n} deselected"
 
 
 @pytest.fixture(scope="session")
@@ -60,3 +67,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def cache_entries(spark) -> int:
+    """Entries in the session's CacheManager: every persisted plan not yet
+    unpersisted, materialized or not (a persisted frame no action has read
+    yet has no RDD, so the RDD registry would miss it)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+@pytest.fixture(autouse=True)
+def cache_guard(request):
+    """Fails a test that leaves more CacheManager entries behind than it
+    found. Fixtures of a wider scope (a module-level cached corpus) are
+    set up before the baseline is read, so they do not count. Yields a
+    callable returning the entries added so far, for tests that assert
+    on a failure path themselves."""
+    if "spark" not in request.fixturenames:
+        yield None
+        return
+    spark = request.getfixturevalue("spark")
+    before = cache_entries(spark)
+    yield lambda: cache_entries(spark) - before
+    left = cache_entries(spark) - before
+    assert left <= 0, f"test left {left} persisted frame(s) in the CacheManager"

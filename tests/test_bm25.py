@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import re
+import uuid
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -72,10 +73,6 @@ def py_bm25(docs, terms, k, k1=1.2, b=0.75):
 
 def rows(df):
     return [tuple(r) for r in df.collect()]
-
-
-def persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 @pytest.fixture()
@@ -165,29 +162,50 @@ def test_string_ids(spark):
     assert [r[0] for r in rows(out)] == ["d'1", "d\\2", "d3"]
 
 
+def jobs_of(spark, fn):
+    """(result rows, Spark jobs run) of ``fn().collect()``."""
+    sc = spark.sparkContext
+    group = f"bm25-job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bm25 job budget")
+    try:
+        out = fn().collect()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
 def test_job_budget_and_nothing_persisted(spark, sf_dir):
     """Over the documents fixture the whole search — the search and reading
     its result — runs at most 2 Spark jobs: the scalar aggregate that
     materializes the per-document frame and the top-k. The exploded
     (doc, term) pipeline it replaced ran 12; any join, window or
     per-document groupBy coming back adds jobs here. The per-document
-    frame is released before the call returns."""
+    frame is released before the call returns (the conftest cache guard
+    fails the test otherwise)."""
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    before = persisted(spark)
-    sc = spark.sparkContext
-    sc.setJobGroup("bm25-job-budget", "bm25 job budget")
-    try:
-        out = bm25_topk(docs, ["merge", "stream", "vector"], k=10).collect()
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("bm25-job-budget") or [])
+    out, jobs = jobs_of(
+        spark, lambda: bm25_topk(docs, ["merge", "stream", "vector"], k=10)
+    )
     assert len(out) == 10
     assert jobs <= 2, f"bm25_topk ran {jobs} Spark jobs"
-    assert persisted(spark) == before
+
+
+def test_ext_bm25_topk_key_job_budget(spark, sf_dir):
+    """The registered key reads the ranked relation as it comes: a sort
+    on top of the already-ranked rows would add a range-partition sample,
+    a shuffle stage and a result job to the 2-job search. The budget's
+    third job is the parquet footer read that loading the documents table
+    runs."""
+    from incremental_etl_on_lakehouse_spark.queries import QUERIES
+
+    out, jobs = jobs_of(spark, lambda: QUERIES["ext_bm25_topk"](spark, sf_dir))
+    assert [r["rank"] for r in out] == list(range(1, len(out) + 1))
+    assert jobs <= 3, f"ext_bm25_topk ran {jobs} Spark jobs"
 
 
 def test_nothing_persisted_when_scan_raises(spark, corpus):
-    before = persisted(spark)
+    """The per-document frame is released when the scan raises (the
+    conftest cache guard fails the test otherwise)."""
     bad = corpus.select(
         "doc_id",
         F.when(F.col("doc_id") == 7, F.raise_error(F.lit("bad row")))
@@ -196,4 +214,3 @@ def test_nothing_persisted_when_scan_raises(spark, corpus):
     )
     with pytest.raises(Exception, match="bad row"):
         bm25_topk(bad, ["alpha"], k=10)
-    assert persisted(spark) == before

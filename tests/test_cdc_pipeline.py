@@ -178,6 +178,29 @@ def test_malformed_records_quarantined(pipeline):
     assert "broken.json" in quarantined[0]["file_name"]
 
 
+def test_failed_bronze_append_releases_landing_batch(
+    pipeline, monkeypatch, cache_guard
+):
+    """The landing batch is persisted for the quarantine split and the
+    Bronze append; an append that raises must release it."""
+    from incremental_etl_on_lakehouse_spark.lake import LakeTable
+
+    p, landing = pipeline
+    write_cdc_file(landing / "cdc_1.json", FILE1)
+    bronze_path = p.bronze.path
+    real = LakeTable.append
+
+    def append(self, *a, **k):
+        if self.path == bronze_path:
+            raise RuntimeError("bronze append failed")
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "append", append)
+    with pytest.raises(RuntimeError, match="bronze append failed"):
+        p.run_available()
+    assert cache_guard() == 0
+
+
 def test_schema_drift_new_column_lands_in_bronze(pipeline):
     """Autoloader schemaLocation semantics: a NEW column appearing in a
     mid-stream file must widen the persisted schema at the next stream-start

@@ -363,8 +363,35 @@ def test_failed_classification_leaves_nothing_persisted(
         return out
 
     monkeypatch.setattr(cls, "collect", collect)
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    # the conftest cache guard fails the test if the frame stays persisted
     with pytest.raises(RuntimeError, match="classification failed"):
         incremental_minmax_update(mm, base, changes, ["grp"], "val")
-    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_failed_topk_merge_releases_every_persisted_frame(
+    spark, tmp_path, monkeypatch, cache_guard
+):
+    """incremental_topk_update persists its deltas, classification and
+    merge source, and the MERGE persists its own source and planning join;
+    a MERGE that raises at its planning probe must release all of them."""
+    from incremental_etl_on_lakehouse_spark.operators.cdc import (
+        incremental_topk_update,
+    )
+
+    topk = LakeTable.create(spark, str(tmp_path / "topk"), ST)
+    base = spark.createDataFrame([(1, "a", 5), (2, "b", 7)], ROWS)
+    changes = base.withColumn("_change_type", F.lit("insert"))
+    cls = type(base)
+    real = cls.collect
+
+    def collect(self):
+        if "__action" in self.columns:
+            raise RuntimeError("merge planning failed")
+        return real(self)
+
+    monkeypatch.setattr(cls, "collect", collect)
+    with pytest.raises(RuntimeError, match="merge planning failed"):
+        incremental_topk_update(
+            topk, base, changes, group_cols=["grp"], value_col="val", k=3
+        )
+    assert cache_guard() == 0

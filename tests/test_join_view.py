@@ -248,6 +248,27 @@ def test_join_view_differential_fuzz(spark, tmp_path, seed):
         _assert_converged(view, left, right, (seed, step))
 
 
+def test_join_view_failed_merge_releases_deltas(
+    spark, tmp_path, monkeypatch, cache_guard
+):
+    """A refresh persists each signed delta, the joined delta and the
+    min/max state frame; a maintenance merge that raises must release
+    every one of them."""
+    left = _mk(spark, tmp_path, "fact", FACT_SCHEMA)
+    right = _mk(spark, tmp_path, "dim", DIM_SCHEMA)
+    view = _view(spark, tmp_path, left, right)
+    left.append(spark.createDataFrame([(1, 10, 1)], FACT_SCHEMA))
+    right.append(spark.createDataFrame([(1, "a")], DIM_SCHEMA))
+
+    def boom(*a, **k):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(LakeTable, "merge", boom)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        view.refresh()
+    assert cache_guard() == 0
+
+
 def test_join_view_crash_before_merge_recovers(spark, tmp_path, monkeypatch):
     """Crash AFTER the write-ahead intent, BEFORE the maintenance merge:
     a fresh refresh replays the pinned range and converges once."""

@@ -652,6 +652,54 @@ def test_dv_update_stages_only_updated_rows(spark, tmp_path):
     ]
 
 
+@pytest.mark.parametrize(
+    "condition, clauses",
+    [
+        # the ON condition fails analysis at the planning join
+        ("source.id = target.nope", [MergeClause("delete")]),
+        # a clause condition fails analysis in the action classifier
+        ("source.id = target.id", [MergeClause("delete", "source.nope > 0")]),
+    ],
+    ids=["on_condition", "clause_condition"],
+)
+def test_failed_merge_releases_its_source(
+    spark, tmp_path, cache_guard, condition, clauses
+):
+    """A MERGE that fails analysis after persisting its source must not
+    leave that source in the CacheManager."""
+    t = make_table(spark, tmp_path, [(1, "England", 10)])
+    src = spark.createDataFrame([(1, "Wales", 20)], SCHEMA)
+    with pytest.raises(Exception, match="nope"):
+        t.merge(src, condition, clauses)
+    assert cache_guard() == 0
+
+
+@pytest.mark.parametrize(
+    "write, dml",
+    [
+        ("_write_dv", lambda t: t.delete("id = 2")),
+        ("_write_cdf", lambda t: t.delete("id = 2")),
+        ("_write_dv", lambda t: t.update({"visitors": "0"}, "id = 2")),
+        ("_write_cdf", lambda t: t.update({"visitors": "0"}, "id = 2")),
+    ],
+    ids=["delete_dv", "delete_cdf", "update_dv", "update_cdf"],
+)
+def test_failed_dv_write_releases_persisted_rows(
+    spark, tmp_path, monkeypatch, cache_guard, write, dml
+):
+    """DV DELETE/UPDATE persist the affected rows for the sidecar, data
+    and change-feed writes; a raising write must still release them."""
+    t = make_dv_table(spark, tmp_path, [(i, "C", i) for i in range(1, 5)])
+
+    def boom(*a, **k):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(LakeTable, write, boom)
+    with pytest.raises(RuntimeError, match="write failed"):
+        dml(t)
+    assert cache_guard() == 0
+
+
 def test_dv_merge_reads_through_vectors_and_rewrites_clean(spark, tmp_path):
     rows = [(1, "A", 10), (2, "B", 20), (3, "C", 30)]
     t = make_dv_table(spark, tmp_path, rows)

@@ -791,21 +791,24 @@ def test_multimodal_decode_paths_have_no_shuffle(spark, sf_dir):
 
 
 def test_micro_plan_mode_restores_aqe(spark):
-    """_micro_plan_mode must restore spark.sql.adaptive.enabled on exit
-    AND on exception — a leaked 'false' would silently strip AQE from
+    """The micro-plan conf scope must restore spark.sql.adaptive.enabled on
+    exit AND on exception — a leaked 'false' would silently strip AQE from
     every later big query in the session."""
-    from incremental_etl_on_lakehouse_spark.lake.table import _micro_plan_mode
+    from incremental_etl_on_lakehouse_spark.lake.table import (
+        MICRO_PLAN_CONF,
+        conf_scope,
+    )
 
     key = "spark.sql.adaptive.enabled"
     assert spark.conf.get(key) == "true"
-    with _micro_plan_mode(spark, True):
+    with conf_scope(spark, MICRO_PLAN_CONF):
         assert spark.conf.get(key) == "false"
     assert spark.conf.get(key) == "true"
     with pytest.raises(RuntimeError):
-        with _micro_plan_mode(spark, True):
+        with conf_scope(spark, MICRO_PLAN_CONF):
             raise RuntimeError("boom")
     assert spark.conf.get(key) == "true"
-    with _micro_plan_mode(spark, False):  # inactive: no flip at all
+    with conf_scope(spark, {}):  # inactive: no flip at all
         assert spark.conf.get(key) == "true"
 
 

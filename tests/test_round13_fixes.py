@@ -2,8 +2,8 @@
 
 The round rebuilt the MERGE planner's classifiers/projections as SQL
 strings, consolidated incremental_minmax_update's two isEmpty probes
-into one classification aggregate, and taught _micro_plan_mode to switch
-off whole-stage codegen. These tests pin the behaviors those rewrites
+into one classification aggregate, and taught the micro-plan conf scope
+to switch off whole-stage codegen. These tests pin the behaviors those rewrites
 could plausibly have broken: identifier quoting, the no-op early return
 (no commit), and conf restoration on scope exit."""
 
@@ -16,9 +16,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from incremental_etl_on_lakehouse_spark.lake.table import (
+    MICRO_PLAN_CONF,
     LakeTable,
     MergeClause,
-    _micro_plan_mode,
+    conf_scope,
 )
 
 
@@ -150,11 +151,11 @@ def test_micro_plan_mode_restores_codegen_conf(spark):
     three confs) on exit, including the not-previously-set case."""
     key = "spark.sql.codegen.wholeStage"
     prev = spark.conf.get(key, None)
-    with _micro_plan_mode(spark, True):
+    with conf_scope(spark, MICRO_PLAN_CONF):
         assert spark.conf.get(key) == "false"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
     assert spark.conf.get(key, None) == prev
     # inactive scope must not touch anything
-    with _micro_plan_mode(spark, False):
+    with conf_scope(spark, {}):
         assert spark.conf.get(key, None) == prev
